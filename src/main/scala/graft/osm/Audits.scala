@@ -19,25 +19,22 @@ object Audits {
     * pair. */
   def bilingualStreetNames(spark: SparkSession, osmPath: String,
       officialPath: String): DataFrame =
-    bilingualStreetNames(
-      OsmIngest.tags(OsmIngest.rawWays(spark, osmPath)),
+    bilingualStreetNames(OsmIngest.rawWays(spark, osmPath),
       OfficialList.lookup(OfficialList.cleaned(spark, officialPath)))
 
-  /** Same audit over prepared inputs — lets callers share a cached scan
-    * (OsmPipeline.streetAudit) instead of re-parsing the XML. */
-  def bilingualStreetNames(tags: DataFrame, lookup: DataFrame): DataFrame = {
-    val streets = StreetNameFix.streetIds(tags)
-    // versions is probed AND re-joined below — staged (see Stage.barrier)
-    val versions = graft.ops.Stage.barrier(
-      StreetNameFix.nameVersions(tags, streets))
-    val results = StreetNameFix.lookupResults(versions, lookup)
-    versions.join(results, Seq("id"))
+  /** Same audit over a prepared raw way scan (the `rowTag=way` schema) —
+    * lets callers share a cached scan (OsmPipeline.streetAudit) instead of
+    * re-parsing the XML. Runs the street fix's own probe
+    * ([[StreetNameFix.probe]]) over each way's unfixed tag array. */
+  def bilingualStreetNames(rawWays: DataFrame, lookup: DataFrame): DataFrame =
+    StreetNameFix.probe(
+        rawWays.select(col("_id").as("id"), OsmIngest.tagArray.as("tags")),
+        lookup)
       .filter(col("n_matches") === 1 &&
         (col("not_found") > 0 || col("n_versions") < 4))
       .select(col("id"), col("en_only"), col("reg_eng"), col("zh_only"),
         col("reg_chi"), col("c_eng").as("official_eng"),
         col("c_chi").as("official_chi"))
-  }
 
   /** The audit's three tolerant phone-shape regexes
     * (audit_phone_numbers.py:30-55). Dialect-safe in Java regex; the

@@ -20,9 +20,11 @@ private[osm] object Cli {
     s
   }
 
+  /** `[osm.xml] [official.xml]` arguments, each defaulting to
+    * [[OsmInputs]]. */
   def pathsOrDefault(args: Array[String]): (String, String) = (
-    args.lift(0).getOrElse("/root/reference/shatin.osm"),
-    args.lift(1).getOrElse("/root/reference/PSI_Street Name_062017.xml"))
+    args.lift(0).getOrElse(OsmInputs.osm),
+    args.lift(1).getOrElse(OsmInputs.official))
 }
 
 /** `AuditStreets [osm.xml] [official.xml]` — the bilingual street-name

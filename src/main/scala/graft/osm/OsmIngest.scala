@@ -1,6 +1,6 @@
 package graft.osm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * All attribute values stay STRINGS, exactly like the reference's CSV model
   * (typed views are derived separately for SQL exploration).
   *
-  * Tag shredding (`explode`) and way-node position assignment (`posexplode`)
-  * happen as narrow, codegen-fused projections — no shuffle anywhere in
-  * ingest.
+  * Tag shaping (an array `transform` / `filter` per element, see
+  * [[tagArray]]), tag shredding (`explode`) and way-node position assignment
+  * (`posexplode`) are narrow projections — no shuffle anywhere in ingest.
   */
 object OsmIngest {
 
@@ -136,30 +136,46 @@ object OsmIngest {
       col("_version").as("version"), col("_changeset").as("changeset"),
       col("_timestamp").as("timestamp"))
 
-  /** Shred the nested tag array into (id, key, value, type, tag_pos) rows.
+  /** One element's shaped tags, still nested: the raw `tag` column as
+    * `array<struct<key, value, type, tag_pos>>` (shape_element's per-element
+    * tag list). The phone and street-name fixes rewrite this array inside
+    * each element row, so fixing never moves OSM rows.
     *
     * `tag_pos` is the tag's ordinal inside its element — the reference's
     * implicit list order, needed downstream for last-writer-wins flag
-    * semantics and append-at-end ordering. Dropped at the CSV sink.
+    * semantics and append-at-end ordering. It is numbered BEFORE the
+    * PROBLEMCHARS filter, so a dropped key leaves a gap. Dropped at the CSV
+    * sink.
     *
     * Key split at the FIRST colon (FIRST_COLON_RE `(.*?):(.*)$`,
     * parse_clean_and_csv.py:135-141): `name:zh:pinyin` → type `name`,
     * key `zh:pinyin`; no colon → type `regular`. */
-  def tags(raw: DataFrame): DataFrame =
-    raw.select(col("_id").as("id"),
-        posexplode(col("tag")).as(Seq("tag_pos", "t")))
-      .select(col("id"), col("tag_pos"),
-        col("t._k").as("k"), col("t._v").as("value"))
-      .filter(!col("k").rlike(ProblemChars))
-      .withColumn("has_colon", col("k").contains(":"))
-      .select(
-        col("id"),
-        when(col("has_colon"), regexp_extract(col("k"), "^(.*?):(.*)$", 2))
-          .otherwise(col("k")).as("key"),
-        col("value"),
-        when(col("has_colon"), regexp_extract(col("k"), "^(.*?):(.*)$", 1))
+  val tagArray: Column = {
+    val indexed = transform(col("tag"), (t, i) =>
+      struct(t("_k").as("k"), t("_v").as("value"), i.as("tag_pos")))
+    val kept = filter(indexed, t => !t("k").rlike(ProblemChars))
+    transform(kept, t => {
+      val k = t("k")
+      val hasColon = k.contains(":")
+      struct(
+        when(hasColon, regexp_extract(k, "^(.*?):(.*)$", 2))
+          .otherwise(k).as("key"),
+        t("value").as("value"),
+        when(hasColon, regexp_extract(k, "^(.*?):(.*)$", 1))
           .otherwise("regular").as("type"),
-        col("tag_pos"))
+        t("tag_pos").as("tag_pos"))
+    })
+  }
+
+  /** Explode shaped tag arrays into (id, key, value, type, tag_pos, extras…)
+    * rows: one row per struct field of `tags`, in field order. */
+  def explodeTags(elements: DataFrame, tags: Column): DataFrame =
+    elements.select(col("id"), explode(tags).as("t")).select("id", "t.*")
+
+  /** Shred the nested tag array into (id, key, value, type, tag_pos) rows
+    * ([[tagArray]], exploded). */
+  def tags(raw: DataFrame): DataFrame =
+    explodeTags(raw.select(col("_id").as("id"), col("tag")), tagArray)
 
   /** ways_nodes(id, node_id, position) — position is the 0-based ordinal of
     * the `<nd>` ref within its way (parse_clean_and_csv.py:143-149), via

@@ -8,9 +8,13 @@ import org.apache.spark.sql.functions._
   * ways), fix street names (ways only), derive update_history, expose the
   * six output relations.
   *
-  * The shaped tag relations are cached: they feed multiple sinks (tags CSV,
-  * update-history aggregation, name-version pivot), mirroring the
-  * reference's single pass computing all outputs together.
+  * Each element is fixed on its own, inside its nested tag array, as the
+  * reference's shape_element does: the staged per-element relations
+  * (id, tags, phone_updated[, name_updated]) feed the tag tables (an
+  * explode) and update_history (a narrow union of flag filters), so OSM
+  * rows never shuffle — only the small official list is grouped and
+  * broadcast. The result equals a per-id regrouping of the shredded tags
+  * whenever element ids are unique within a kind, as in an OSM extract.
   */
 final case class OsmPipeline(spark: SparkSession, osmPath: String,
     officialPath: String, quarantineDir: Option[String] = None) {
@@ -124,28 +128,35 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   def rawNodeTags: DataFrame = OsmIngest.tags(rawNodes)
   def rawWayTags: DataFrame = OsmIngest.tags(rawWays)
 
-  /** node tags after phone fix (with tag_pos + phone_changed). */
-  private val nodeTagsFixedM = memo(
-    graft.ops.Stage.barrier(PhoneFix.fixPhonesInTags(rawNodeTags)))
-  def nodeTagsFixed: DataFrame = nodeTagsFixedM()
+  /** One row per element with its shaped tag array phone-fixed in place. */
+  private def phoneFixed(raw: DataFrame): DataFrame =
+    raw.select(col("_id").as("id"),
+      PhoneFix.fixPhones(OsmIngest.tagArray).as("tags"))
 
-  /** way tags after phone fix THEN street-name fix (process_map order,
-    * parse_clean_and_csv.py:260,272-273). phoneFixed is staged: it feeds
-    * the fix plan AND the apply step of the same job (see Stage.barrier). */
-  private val wayTagsFixedM = memo {
-    val phoneFixed =
-      graft.ops.Stage.barrier(PhoneFix.fixPhonesInTags(rawWayTags))
-    val streets = StreetNameFix.streetIds(phoneFixed)
-    // versions feeds the lookup probe AND the plan join; plan feeds the
-    // overwrite AND the append branch — both tiny (one row per street
-    // way), both double-computed without a stage (no subplan CSE)
-    val versions = graft.ops.Stage.barrier(
-      StreetNameFix.nameVersions(phoneFixed, streets))
-    val plan = graft.ops.Stage.barrier(
-      StreetNameFix.fixPlan(versions, lookup))
-    graft.ops.Stage.barrier(StreetNameFix.applyFix(phoneFixed, plan))
+  /** Nodes fixed per element: (id, tags, phone_updated). */
+  private val nodesFixedM = memo(graft.ops.Stage.barrier(
+    phoneFixed(rawNodes).select(col("id"), col("tags"),
+      PhoneFix.phoneUpdated(col("tags")).as("phone_updated"))))
+
+  /** Ways fixed per element, phone fix THEN street-name fix (process_map
+    * order, parse_clean_and_csv.py:260,272-273):
+    * (id, tags, phone_updated, name_updated). The official lookup is the
+    * only relation that moves (grouped by name, broadcast). */
+  private val waysFixedM = memo {
+    val fixed = StreetNameFix.fixStreetNames(phoneFixed(rawWays), lookup)
+    graft.ops.Stage.barrier(fixed.select(col("id"), col("tags"),
+      PhoneFix.phoneUpdated(col("tags")).as("phone_updated"),
+      StreetNameFix.nameUpdated(col("tags")).as("name_updated")))
   }
-  def wayTagsFixed: DataFrame = wayTagsFixedM()
+
+  /** node tags after phone fix (with tag_pos + phone_changed). */
+  def nodeTagsFixed: DataFrame =
+    OsmIngest.explodeTags(nodesFixedM(), col("tags"))
+
+  /** way tags after phone fix THEN street-name fix (with tag_pos +
+    * name_changed + phone_changed). */
+  def wayTagsFixed: DataFrame =
+    OsmIngest.explodeTags(waysFixedM(), col("tags"))
 
   /** Output projections (drop the internal tag_pos / flag columns). */
   def nodeTags: DataFrame =
@@ -154,23 +165,19 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     wayTagsFixed.select(col("id"), col("key"), col("value"), col("type"))
 
   /** update_history(id, element_type, field_updated) — K2
-    * (parse_clean_and_csv.py:263-290). Phone flags replicate the
-    * reference's last-writer-wins quirk exactly (see PhoneFix). */
+    * (parse_clean_and_csv.py:263-290): a narrow union of the per-element
+    * flags. Phone flags replicate the reference's last-writer-wins quirk
+    * exactly (see PhoneFix). */
   private val updateHistoryM = memo {
-    val nodePhone = PhoneFix.phoneUpdatedPerElement(nodeTagsFixed)
-      .filter(col("phone_updated"))
-      .select(col("id"), lit("node").as("element_type"),
-        lit("phone").as("field_updated"))
-    val wayPhone = PhoneFix.phoneUpdatedPerElement(wayTagsFixed)
-      .filter(col("phone_updated"))
-      .select(col("id"), lit("way").as("element_type"),
-        lit("phone").as("field_updated"))
-    val wayName = StreetNameFix.nameUpdatedPerWay(wayTagsFixed)
-      .select(col("id"), lit("way").as("element_type"),
-        lit("name").as("field_updated"))
+    def flagged(elements: DataFrame, flag: String, kind: String,
+        field: String): DataFrame =
+      elements.filter(col(flag)).select(col("id"),
+        lit(kind).as("element_type"), lit(field).as("field_updated"))
     // referenced twice (way + node branches) by the contributions query
     graft.ops.Stage.barrier(
-      nodePhone.unionByName(wayPhone).unionByName(wayName))
+      flagged(nodesFixedM(), "phone_updated", "node", "phone")
+        .unionByName(flagged(waysFixedM(), "phone_updated", "way", "phone"))
+        .unionByName(flagged(waysFixedM(), "name_updated", "way", "name")))
   }
   def updateHistory: DataFrame = updateHistoryM()
 
@@ -188,7 +195,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
 
   /** X5 — the bilingual street-name audit (uncorrected official list). */
   def streetAudit: DataFrame =
-    Audits.bilingualStreetNames(rawWayTags,
+    Audits.bilingualStreetNames(rawWays,
       OfficialList.lookup(officialUncorrected))
 
   /** Register the reference's five SQL tables + update_history as temp
@@ -224,6 +231,10 @@ object ProcessMap {
     val (osm, officialPath, out, quarantine) = args match {
       case Array(a, b, c) => (a, b, c, None)
       case Array(a, b, c, q) => (a, b, c, Some(q))
+      case _ =>
+        System.err.println("usage: ProcessMap <osm.xml> <official.xml> " +
+          "<outDir> [quarantineDir]")
+        sys.exit(2)
     }
     val spark = graft.Tables.configure(SparkSession.builder())
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))

@@ -18,9 +18,8 @@ object OsmProfile {
     spark.range(1000).selectExpr("sum(id)").collect() // session warmup
 
     // optional [osm.xml] [official.xml] args (e.g. a scale_osm.py tile)
-    val p = OsmPipeline(spark,
-      args.lift(0).getOrElse(OsmQueriesPaths.OsmPath),
-      args.lift(1).getOrElse(OsmQueriesPaths.PsiPath))
+    val (osm, official) = Cli.pathsOrDefault(args)
+    val p = OsmPipeline(spark, osm, official)
     def t(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
@@ -43,9 +42,16 @@ object OsmProfile {
   }
 }
 
-/** Path constants shared with queries.OsmQueries (kept here so the
-  * diagnostic has no dependency on the queries package). */
-object OsmQueriesPaths {
+/** The OSM input paths, the one configuration point every OSM entry point
+  * reads (queries.OsmQueries, the Cli mains, OsmProfile):
+  * `SPARK_GRAFT_OSM` names the extract and `SPARK_GRAFT_OSM_OFFICIAL` the
+  * official street list; unset, each defaults to the reference's bundled
+  * input below. */
+object OsmInputs {
   val OsmPath = "/root/reference/shatin.osm"
   val PsiPath = "/root/reference/PSI_Street Name_062017.xml"
+
+  def osm: String = sys.env.getOrElse("SPARK_GRAFT_OSM", OsmPath)
+  def official: String =
+    sys.env.getOrElse("SPARK_GRAFT_OSM_OFFICIAL", PsiPath)
 }

@@ -1,14 +1,14 @@
 package graft.osm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Phone-number canonicalization (C6-C9 + X3 in SURVEY.md §2.9/2.10;
   * ref: parse_clean_and_csv.py:55-59,490-534).
   *
-  * Built entirely from codegen'd `functions._` higher-order array functions —
-  * no UDF — so the whole fix stays inside WholeStageCodegen and scales as a
-  * narrow per-row projection (zero shuffle).
+  * Built entirely from `functions._` higher-order array functions — no UDF —
+  * and applied inside each element's nested tag array, so the fix is a
+  * narrow per-element projection (zero shuffle).
   */
 object PhoneFix {
 
@@ -51,31 +51,34 @@ object PhoneFix {
     when(size(matched) > 0, array_join(matched, ";")).otherwise(v)
   }
 
-  /** X3 — apply [[fixPhoneValue]] to every tag whose key ∈ PhoneKeys.
-    * Adds `phone_changed` (did THIS tag's value change) for update-history
-    * derivation. Expects the shaped tags relation
-    * (id, key, value, type, tag_pos). */
-  def fixPhonesInTags(tags: DataFrame): DataFrame = {
-    val fixed = when(col("key").isin(PhoneKeys: _*),
-      fixPhoneValue(col("value"))).otherwise(col("value"))
-    tags
-      .withColumn("new_value", fixed)
-      .withColumn("phone_changed",
-        col("key").isin(PhoneKeys: _*) && col("new_value") =!= col("value"))
-      .withColumn("value", col("new_value"))
-      .drop("new_value")
+  private def isPhoneKey(key: Column): Column = key.isin(PhoneKeys: _*)
+
+  /** X3 — apply [[fixPhoneValue]], inside one element's shaped tag array
+    * ([[OsmIngest.tagArray]]), to every tag whose key ∈ PhoneKeys
+    * (fix_phones_in_tags). Each tag gains `phone_changed` (did THIS tag's
+    * value change) for update-history derivation:
+    * `array<struct<key, value, type, tag_pos, phone_changed>>`. */
+  def fixPhones(tags: Column): Column = {
+    val withNew = transform(tags, t => struct(t("key").as("key"),
+      t("value").as("value"), t("type").as("type"), t("tag_pos").as("tag_pos"),
+      when(isPhoneKey(t("key")), fixPhoneValue(t("value")))
+        .otherwise(t("value")).as("new_value")))
+    transform(withNew, t => struct(t("key").as("key"),
+      t("new_value").as("value"), t("type").as("type"),
+      t("tag_pos").as("tag_pos"),
+      (isPhoneKey(t("key")) && t("new_value") =!= t("value"))
+        .as("phone_changed")))
   }
 
-  /** Per-element phone-updated flag, replicating the reference's
-    * last-writer-wins quirk (fix_phones_in_tags, parse_clean_and_csv.py:533:
-    * `updated` is overwritten by each phone-key tag, so the LAST phone-key tag
-    * in document order decides). Implemented as max-by-tag_pos over the
-    * phone-key tags — exact parity, one partial aggregation.
-    * Returns (id, phone_updated). */
-  def phoneUpdatedPerElement(fixedTags: DataFrame): DataFrame =
-    fixedTags
-      .filter(col("key").isin(PhoneKeys: _*))
-      .groupBy(col("id"))
-      .agg(max(struct(col("tag_pos"), col("phone_changed"))).as("m"))
-      .select(col("id"), col("m.phone_changed").as("phone_updated"))
+  /** Per-element phone-updated flag over a [[fixPhones]]-fixed tag array,
+    * replicating the reference's last-writer-wins quirk
+    * (fix_phones_in_tags, parse_clean_and_csv.py:533: `updated` is
+    * overwritten by each phone-key tag, so the LAST phone-key tag in
+    * document order decides) as the max-by-tag_pos over the phone-key tags.
+    * NULL when the element has no phone-key tag. */
+  def phoneUpdated(fixedTags: Column): Column =
+    array_max(transform(filter(fixedTags, t => isPhoneKey(t("key"))),
+        t => struct(t("tag_pos").as("tag_pos"),
+          t("phone_changed").as("phone_changed"))))
+      .getField("phone_changed")
 }

@@ -6,12 +6,16 @@ import org.apache.spark.sql.functions._
 /** Bilingual street-name audit + fix (F2, X1, J1/J2, X2 in SURVEY.md §2;
   * ref: parse_clean_and_csv.py:380-485).
   *
-  * Shape: way-level name versions are a manual pivot (one groupBy over the
-  * street ways' tags), the official-list probe is a broadcast hash join, and
-  * the fix is a per-tag projection after joining way-level canonical names
-  * back — two shuffles total (the groupBy on id and the fix-back join on id),
-  * both on the same key so AQE can coalesce; the official list never
-  * shuffles.
+  * Shape: each way is fixed on its own, inside its nested tag array
+  * ([[OsmIngest.tagArray]]), as the reference's shape_element /
+  * fix_street_names do per element. The name versions are array
+  * aggregates over the way's tags, the official-list probe is four
+  * broadcast left joins (one per version) against the lookup grouped by
+  * name, and the fix rewrites and appends tags inside the array. OSM rows
+  * never shuffle; the only data that moves is the small official list,
+  * grouped once and broadcast. Because the unit is the element, the output
+  * equals a per-id regrouping of shredded tags whenever element ids are
+  * unique within a kind (as in an OSM extract).
   */
 object StreetNameFix {
 
@@ -26,144 +30,139 @@ object StreetNameFix {
   val EngNameRe = "[ ]*([A-Za-z0-9'\\-,. ]{4,})"
   val ChiNameRe = "([^A-Za-z'\\-,. ]+[0-9]?[^A-Za-z'\\-,. ]+)"
 
-  /** F2 — ids of ways that are streets: ∃ tag key='highway' with a street
-    * value (is_street, parse_clean_and_csv.py:380-388). */
+  /** F2 — is a tag a street marker: key='highway' with a street value
+    * (is_street, parse_clean_and_csv.py:380-388). */
+  private def isStreetTag(key: Column, value: Column): Column =
+    key === "highway" && value.isin(StreetValues: _*)
+
+  /** F2 — ids of ways that are streets, over shredded tags
+    * (id, key, value, …). */
   def streetIds(tags: DataFrame): DataFrame =
-    tags.filter(col("key") === "highway" && col("value").isin(StreetValues: _*))
+    tags.filter(isStreetTag(col("key"), col("value")))
       .select(col("id")).distinct()
 
-  /** Last-writer-wins pick of a conditional value: max over
-    * (tag_pos, value) structs — rows failing `cond` contribute NULL and are
-    * ignored by max. Mirrors the reference's dict-overwrite semantics when a
-    * way carries duplicate name tags (get_street_names assigns per tag in
-    * list order, parse_clean_and_csv.py:397-408). */
-  private def lastBy(cond: Column, value: Column): Column =
-    max(when(cond, struct(col("tag_pos"), value.as("v")))).getField("v")
+  /** F2 — is the element whose shaped tag array this is a street. */
+  private def isStreet(tags: Column): Column =
+    exists(tags, t => isStreetTag(t("key"), t("value")))
 
-  /** X1 — pivot each street way's tags into up-to-4 name versions:
-    * en_only (name:en), zh_only (name:zh), reg_eng / reg_chi (regex split of
-    * the plain `name` tag). An empty regex match means "version absent"
-    * (Python re.search None → our nullif(…, '')). Also emits presence flags
-    * and the way's max tag_pos for append ordering.
-    * Returns one row per street way. */
-  def nameVersions(tags: DataFrame, streets: DataFrame): DataFrame = {
-    val isEn = col("type") === "name" && col("key") === "en"
-    val isZh = col("type") === "name" && col("key") === "zh"
-    val isReg = col("type") === "regular" && col("key") === "name"
-    val regEng = nullif(regexp_extract(col("value"), EngNameRe, 1), lit(""))
-    val regChi = nullif(regexp_extract(col("value"), ChiNameRe, 1), lit(""))
-    tags.join(streets, Seq("id"), "left_semi")
-      .groupBy(col("id"))
-      .agg(
-        lastBy(isEn, col("value")).as("en_only"),
-        lastBy(isZh, col("value")).as("zh_only"),
-        lastBy(isReg && regEng.isNotNull, regEng).as("reg_eng"),
-        lastBy(isReg && regChi.isNotNull, regChi).as("reg_chi"),
-        max(when(isEn, 1).otherwise(0)).as("has_en"),
-        max(when(isZh, 1).otherwise(0)).as("has_zh"),
-        max(when(isReg, 1).otherwise(0)).as("has_reg"),
-        max(col("tag_pos")).as("max_pos"))
-      .withColumn("n_versions",
-        col("en_only").isNotNull.cast("int")
-          + col("zh_only").isNotNull.cast("int")
-          + col("reg_eng").isNotNull.cast("int")
-          + col("reg_chi").isNotNull.cast("int"))
-  }
+  private def isEn(t: Column) = t("type") === "name" && t("key") === "en"
+  private def isZh(t: Column) = t("type") === "name" && t("key") === "zh"
+  private def isReg(t: Column) = t("type") === "regular" && t("key") === "name"
+  private def regEng(t: Column) =
+    nullif(regexp_extract(t("value"), EngNameRe, 1), lit(""))
+  private def regChi(t: Column) =
+    nullif(regexp_extract(t("value"), ChiNameRe, 1), lit(""))
 
-  /** J1 — probe every present name version against the broadcast official
-    * lookup; per way: number of DISTINCT official entries matched, number of
-    * versions not found, and the (single) matched canonical pair
-    * (name_look_up, parse_clean_and_csv.py:411-424 — the entry identity is
-    * the (eng, chi) pair, replacing the reference's positional index). */
-  def lookupResults(versions: DataFrame, lookup: DataFrame): DataFrame = {
-    val probes = versions.select(col("id"),
-        explode(array(col("en_only"), col("zh_only"), col("reg_eng"),
-          col("reg_chi"))).as("name"))
-      .filter(col("name").isNotNull)
-    probes.join(broadcast(lookup), Seq("name"), "left")
-      .groupBy(col("id"))
-      .agg(
-        // struct(null,null) is itself non-null — wrap in when() so unmatched
-        // probes contribute NULL and are excluded from the distinct count
-        countDistinct(when(col("eng").isNotNull,
-          struct(col("eng"), col("chi")))).as("n_matches"),
-        sum(when(col("eng").isNull, 1).otherwise(0)).as("not_found"),
-        max(struct(col("eng"), col("chi"))).as("match"))
-      .select(col("id"), col("n_matches"), col("not_found"),
-        col("match.eng").as("c_eng"), col("match.chi").as("c_chi"))
-  }
+  /** Last-writer-wins pick of a conditional value over one element's tag
+    * array: max over (tag_pos, value) structs — tags failing `cond`
+    * contribute NULL, which array_max skips. Mirrors the reference's
+    * dict-overwrite semantics when a way carries duplicate name tags
+    * (get_street_names assigns per tag in list order,
+    * parse_clean_and_csv.py:397-408). */
+  private def lastBy(tags: Column, cond: Column => Column,
+      value: Column => Column): Column =
+    array_max(transform(tags, t => when(cond(t),
+      struct(t("tag_pos").as("tag_pos"), value(t).as("v"))))).getField("v")
 
-  /** X2 — the fix plan per way: canonical names for ways with EXACTLY ONE
-    * distinct official match (fix_street_names, parse_clean_and_csv.py:
-    * 426-485). Returns (id, c_eng, c_chi, c_reg, has_en, has_zh, has_reg,
-    * max_pos). */
-  def fixPlan(versions: DataFrame, lookup: DataFrame): DataFrame =
-    lookupResults(versions, lookup)
-      .filter(col("n_matches") === 1)
-      .join(versions.select(col("id"), col("has_en"), col("has_zh"),
-        col("has_reg"), col("max_pos")), Seq("id"))
-      .withColumn("c_reg", concat(col("c_chi"), lit(" "), col("c_eng")))
+  /** The four name versions, in probe order: en_only (name:en), zh_only
+    * (name:zh), reg_eng / reg_chi (regex split of the plain `name` tag).
+    * An empty regex match means "version absent" (Python re.search None →
+    * our nullif(…, '')). */
+  private val Versions: Seq[(String, Column => Column)] = Seq(
+    "en_only" -> (tags => lastBy(tags, isEn, _("value"))),
+    "zh_only" -> (tags => lastBy(tags, isZh, _("value"))),
+    "reg_eng" -> (tags => lastBy(tags, t => isReg(t) && regEng(t).isNotNull,
+      regEng)),
+    "reg_chi" -> (tags => lastBy(tags, t => isReg(t) && regChi(t).isNotNull,
+      regChi)))
 
-  /** Apply the fix: overwrite the three name-tag kinds with canonical
-    * values on fixable ways; append any of the three that are missing (at
-    * the end of the way's tag list, order en → zh → reg, matching the
-    * reference's append order at parse_clean_and_csv.py:469-484).
-    * Input/out: shaped tags (id, key, value, type, tag_pos) +
-    * `name_changed` on every row. */
-  def applyFix(tags: DataFrame, plan: DataFrame): DataFrame = {
-    val p = plan.select(col("id"), col("c_eng"), col("c_chi"), col("c_reg"),
-      col("has_en"), col("has_zh"), col("has_reg"), col("max_pos"))
-    val isEn = col("type") === "name" && col("key") === "en"
-    val isZh = col("type") === "name" && col("key") === "zh"
-    val isReg = col("type") === "regular" && col("key") === "name"
-    val fixable = col("c_eng").isNotNull
-
-    // pass through any extra columns the caller carries (e.g. the phone
-    // fixer's per-tag phone_changed flag)
-    val extras = tags.columns.toSeq
-      .filterNot(Set("id", "key", "value", "type", "tag_pos"))
-    val overwritten = tags.join(p, Seq("id"), "left")
-      .withColumn("new_value",
-        when(fixable && isEn, col("c_eng"))
-          .when(fixable && isZh, col("c_chi"))
-          .when(fixable && isReg, col("c_reg"))
-          .otherwise(col("value")))
-      .withColumn("name_changed", col("new_value") =!= col("value"))
-      .select((Seq(col("id"), col("key"), col("new_value").as("value"),
-        col("type"), col("tag_pos"), col("name_changed")) ++
-        extras.map(col)): _*)
-
-    val appended = p.select(col("id"), col("max_pos"),
-        explode(array(
-          when(col("has_en") === 0,
-            struct(lit("en").as("key"), col("c_eng").as("value"),
-              lit("name").as("type"), lit(0).as("ord"))),
-          when(col("has_zh") === 0,
-            struct(lit("zh").as("key"), col("c_chi").as("value"),
-              lit("name").as("type"), lit(1).as("ord"))),
-          when(col("has_reg") === 0,
-            struct(lit("name").as("key"), col("c_reg").as("value"),
-              lit("regular").as("type"), lit(2).as("ord"))))).as("t"))
-      .filter(col("t").isNotNull)
-      .select(col("id"), col("t.key").as("key"), col("t.value").as("value"),
-        col("t.type").as("type"),
-        (col("max_pos") + 1 + col("t.ord")).as("tag_pos"),
-        lit(true).as("name_changed"))
-
-    // appended tags never carry caller extras — fill with nulls/false
-    val appendedAligned = extras.foldLeft(appended) { (df, c) =>
-      df.withColumn(c,
-        if (c == "phone_changed") lit(false)
-        else lit(null).cast(tags.schema(c).dataType))
+  /** X1 + J1 — the street probe shared by the fix and the audit, one row
+    * per element of `elements` (id, tags, …; `tags` a shaped tag array).
+    * Adds, for street ways, the four name versions (X1) and their probe
+    * against the official `lookup` (name, eng, chi) (name_look_up,
+    * parse_clean_and_csv.py:411-424 — the entry identity is the (eng, chi)
+    * pair, replacing the reference's positional index):
+    *  - `n_matches`: number of DISTINCT official entries matched;
+    *  - `not_found`: number of present versions no entry knows;
+    *  - `c_eng` / `c_chi`: the matched entry when `n_matches` = 1;
+    *  - `n_versions`: number of present versions.
+    * Non-street ways get NULL versions and `n_matches` = 0. */
+  def probe(elements: DataFrame, lookup: DataFrame): DataFrame = {
+    val street = elements.withColumn("_street", isStreet(col("tags")))
+    val versions = street.select(col("*") +: Versions.map { case (n, v) =>
+      when(col("_street"), v(col("tags"))).as(n) }: _*).drop("_street")
+    // one probe table row per name: every entry that name can stand for
+    val byName = broadcast(lookup.groupBy(col("name"))
+      .agg(collect_set(struct(col("eng"), col("chi"))).as("matches")))
+    val names = Versions.map(_._1)
+    val probed = names.foldLeft(versions) { (df, v) =>
+      val p = byName.as(s"_p_$v")
+      df.join(p, df(v) === col(s"_p_$v.name"), "left")
+        .select(df("*"), col(s"_p_$v.matches").as(s"_m_$v"))
     }
-    overwritten.unionByName(appendedAligned)
+    val matches = array_distinct(flatten(filter(
+      array(names.map(v => col(s"_m_$v")): _*), _.isNotNull)))
+    val notFound = names.map(v =>
+      when(col(v).isNotNull && col(s"_m_$v").isNull, 1).otherwise(0))
+      .reduce(_ + _)
+    // array_max, not element_at: NULL (never an ANSI index error) on an
+    // empty match list, and the single entry when n_matches = 1
+    val single = when(size(col("_matches")) === 1, array_max(col("_matches")))
+    probed
+      .withColumn("_matches", matches)
+      .withColumn("not_found", notFound)
+      .withColumn("n_matches", size(col("_matches")))
+      .withColumn("c_eng", single.getField("eng"))
+      .withColumn("c_chi", single.getField("chi"))
+      .withColumn("n_versions",
+        names.map(v => col(v).isNotNull.cast("int")).reduce(_ + _))
+      .drop("_matches" +: names.map(v => s"_m_$v"): _*)
   }
 
-  /** Per-way name-updated flag: any overwrite changed a value, or anything
-    * was appended (ref `updated` flag, parse_clean_and_csv.py:431-485).
-    * Returns (id, name_updated=true) rows only. */
-  def nameUpdatedPerWay(fixedTags: DataFrame): DataFrame =
-    fixedTags.filter(col("name_changed"))
-      .select(col("id")).distinct()
-      .withColumn("name_updated", lit(true))
+  /** X2 — fix each street way's name tags inside its tag array
+    * (fix_street_names, parse_clean_and_csv.py:426-485). A way with
+    * EXACTLY ONE distinct official match gets the three name-tag kinds
+    * overwritten with the canonical values (en → eng, zh → chi, regular
+    * name → "chi eng"), and any of the three that is missing appended
+    * after the way's last tag, in the order en → zh → reg, at
+    * `tag_pos` = max tag_pos + 1 + (0 | 1 | 2) (parse_clean_and_csv.py:
+    * 469-484). Every tag gains `name_changed`; appended tags carry
+    * `name_changed` = true and `phone_changed` = false.
+    *
+    * In: (id, tags) with `tags` a [[PhoneFix.fixPhones]] array.
+    * Out: (id, tags) with
+    * `tags: array<struct<key, value, type, tag_pos, name_changed,
+    * phone_changed>>`. */
+  def fixStreetNames(elements: DataFrame, lookup: DataFrame): DataFrame = {
+    val tags = col("tags")
+    val fix = col("n_matches") === 1
+    val cEng = col("c_eng")
+    val cChi = col("c_chi")
+    val cReg = concat(cChi, lit(" "), cEng)
+    val overwritten = transform(tags, t => {
+      val v = when(fix && isEn(t), cEng).when(fix && isZh(t), cChi)
+        .when(fix && isReg(t), cReg).otherwise(t("value"))
+      struct(t("key").as("key"), v.as("value"), t("type").as("type"),
+        t("tag_pos").as("tag_pos"), (v =!= t("value")).as("name_changed"),
+        t("phone_changed").as("phone_changed"))
+    })
+    val maxPos = array_max(transform(tags, _("tag_pos")))
+    def append(is: Column => Column, key: String, value: Column,
+        tpe: String, ord: Int): Column =
+      when(fix && !exists(tags, is), struct(lit(key).as("key"),
+        value.as("value"), lit(tpe).as("type"),
+        (maxPos + 1 + ord).as("tag_pos"), lit(true).as("name_changed"),
+        lit(false).as("phone_changed")))
+    val appended = filter(array(append(isEn, "en", cEng, "name", 0),
+      append(isZh, "zh", cChi, "name", 1),
+      append(isReg, "name", cReg, "regular", 2)), _.isNotNull)
+    probe(elements.select(col("id"), tags), lookup)
+      .select(col("id"), concat(overwritten, appended).as("tags"))
+  }
+
+  /** Per-way name-updated flag over a [[fixStreetNames]] array: any
+    * overwrite changed a value, or anything was appended (ref `updated`
+    * flag, parse_clean_and_csv.py:431-485). */
+  def nameUpdated(fixedTags: Column): Column =
+    exists(fixedTags, _("name_changed"))
 }

@@ -25,8 +25,10 @@ import graft.osm.{Audits, Explore, OsmPipeline}
   */
 object OsmQueries {
 
-  val OsmPath = "/root/reference/shatin.osm"
-  val PsiPath = "/root/reference/PSI_Street Name_062017.xml"
+  /** The inputs, from [[graft.osm.OsmInputs]] (`SPARK_GRAFT_OSM`,
+    * `SPARK_GRAFT_OSM_OFFICIAL`). */
+  val OsmPath: String = graft.osm.OsmInputs.osm
+  val PsiPath: String = graft.osm.OsmInputs.official
 
   // One pipeline per session — queries share the staged relations (each
   // `lazy val` in OsmPipeline materializes its cache on first access via

@@ -1,12 +1,15 @@
 package graft.osm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** Edge cases of the street-name fixer not exercised by shatin.osm,
   * checked against the reference's exact semantics
-  * (parse_clean_and_csv.py:380-485). */
+  * (parse_clean_and_csv.py:380-485). Inputs are written as shredded tag
+  * rows and nested into one tag array per element, the unit the fix works
+  * on. */
 class StreetNameFixSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,11 +23,21 @@ class StreetNameFixSpec extends SparkSpec {
     rows.toDF("id", "key", "value", "type", "tag_pos")
       .withColumn("phone_changed", lit(false))
 
-  def fix(tags: org.apache.spark.sql.DataFrame) = {
-    val streets = StreetNameFix.streetIds(tags)
-    val versions = StreetNameFix.nameVersions(tags, streets)
-    StreetNameFix.applyFix(tags, StreetNameFix.fixPlan(versions, lookup))
-  }
+  /** Shredded rows → one (id, tags) row per element, tags in tag_pos
+    * order with the fields of a phone-fixed tag array. */
+  def nested(tags: DataFrame): DataFrame =
+    tags.groupBy(col("id"))
+      .agg(sort_array(collect_list(struct(col("tag_pos"), col("key"),
+        col("value"), col("type"), col("phone_changed")))).as("t"))
+      .select(col("id"), transform(col("t"), t => struct(t("key").as("key"),
+        t("value").as("value"), t("type").as("type"),
+        t("tag_pos").as("tag_pos"),
+        t("phone_changed").as("phone_changed"))).as("tags"))
+
+  /** The fix, shredded back into (id, key, value, type, tag_pos,
+    * name_changed, phone_changed) rows. */
+  def fix(tags: DataFrame): DataFrame = OsmIngest.explodeTags(
+    StreetNameFix.fixStreetNames(nested(tags), lookup), col("tags"))
 
   test("duplicate name tags: the LAST one wins the version pivot") {
     // two name:en tags; the later (wrong) one decides the lookup — it
@@ -34,9 +47,7 @@ class StreetNameFixSpec extends SparkSpec {
       (1L, "en", "Main Street", "name", 1),
       (1L, "en", "Wrong Street", "name", 2),
       (1L, "zh", "大街", "name", 3))
-    val versions = StreetNameFix.nameVersions(tags,
-      StreetNameFix.streetIds(tags))
-    val v = versions.collect().head
+    val v = StreetNameFix.probe(nested(tags), lookup).collect().head
     assert(v.getAs[String]("en_only") == "Wrong Street")
 
     val out = fix(tags)
