@@ -56,7 +56,9 @@ object Tables {
     } else Seq((path, f.length(), f.lastModified()))
   }
 
-  // (session, path) → (snapshot at resolution, resolved frame).
+  // path key → (snapshot at resolution, resolved frame), a SESSION-SCOPED
+  // entry of the session registry (graft.ops.SessionScoped's companion):
+  // it survives Stage.releaseAll and ends with the session's context.
   // METADATA memo only (guide §6 — repeated file listing / footer
   // inference is driver-side fixed cost): `spark.read.parquet` re-lists
   // the path and re-reads parquet footers on EVERY call (~60–110 ms per
@@ -66,12 +68,7 @@ object Tables {
   // memoized value is the resolved LOGICAL PLAN (schema + file index);
   // no rows, no results — every action still scans the parquet files,
   // exactly like Spark's own catalog relation cache for `spark.table`.
-  // Entries are validated against a fresh path snapshot on EVERY access
-  // and dropped when the owning session's context ends.
-  private val relationMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(String, Long, Long)], DataFrame)]()
-  private val memoHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  // Entries are validated against a fresh path snapshot on EVERY access.
 
   /** `spark.read.parquet(path)` through the session-scoped metadata memo:
     * resolution (file listing + footer schema inference) happens once per
@@ -91,25 +88,15 @@ object Tables {
 
   private def memoized(spark: SparkSession, path: String, key: String)(
       resolve: => DataFrame): DataFrame = {
-    if (memoHooked.add(spark)) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler
-                .SparkListenerApplicationEnd): Unit = {
-            relationMemo.keySet().removeIf(_._1 eq spark)
-            memoHooked.remove(spark)
-          }
-        })
-    }
-    val k = (spark, key)
+    val memo = graft.ops.SessionScoped.sessionScoped(spark)
+    val k = (Tables, key)
     val snap = pathSnapshot(path)
-    val hit = relationMemo.get(k)
-    if (hit != null && hit._1 == snap) hit._2
-    else {
-      val df = resolve
-      relationMemo.put(k, (snap, df))
-      df
+    memo.get(k) match {
+      case (`snap`, df) => df.asInstanceOf[DataFrame]
+      case _ =>
+        val df = resolve
+        memo.put(k, (snap, df))
+        df
     }
   }
 

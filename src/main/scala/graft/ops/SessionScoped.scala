@@ -2,108 +2,120 @@ package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** A per-(SparkSession, key) memo for staged DataFrames and driver-side
-  * metadata, with an explicit lifecycle:
+  * metadata: a typed view over the session registry (the companion, which
+  * holds the lifecycle contract). Its entries are RELEASE-SCOPED:
+  * `Stage.releaseAll(session)` drops them, and the next access recomputes
+  * — and re-stages — fresh (rebuild-on-touch).
   *
-  *  - compute is SERIALIZED per key via a lazy holder: `computeIfAbsent`
-  *    only allocates the (cheap) holder under the map's bin lock; the
-  *    multi-job `Stage.barrier` materialization runs when the holder is
-  *    first forced, outside that lock, and a concurrent caller blocks on
-  *    the holder instead of double-staging. This also removes the old
-  *    lost-race discard path, which could unpersist cache blocks the
-  *    winner shared (Spark's CacheManager keys entries by analyzed plan,
-  *    so two racers' barriers usually landed on ONE cache entry).
-  *  - entries for a session are dropped when that session's context ends
-  *    (a `SparkListener` registered on first use), so stopped sessions
-  *    don't retain DataFrames — and their pinned cache lineage — forever.
-  *  - `evict(session)` releases eagerly for long-lived sessions, and every
-  *    instance is evicted by `Stage.releaseAll(session)` (a global release
-  *    hook): a memo that outlived its staged frame's cache would hand out
-  *    an unpersisted DataFrame that recomputes from source on every
-  *    action. Eviction instead makes the next access recompute — and
-  *    re-stage — fresh (rebuild-on-touch).
+  * Compute is SERIALIZED per key via a lazy holder: `computeIfAbsent` only
+  * allocates the (cheap) holder under the map's bin lock; the multi-job
+  * `Stage.barrier` materialization runs when the holder is first forced,
+  * outside that lock, and a concurrent caller blocks on the holder instead
+  * of double-staging (Spark's CacheManager keys entries by analyzed plan,
+  * so two racers' barriers would usually land on ONE cache entry, and a
+  * loser's discard could unpersist the winner's blocks).
+  *
+  * An instance is compared by identity, so a memo that is a field of an
+  * object (OsmPipeline's relation memos) is keyed by that object's
+  * instance.
   */
 final class SessionScoped[V] {
   private final class Holder(compute: () => V) { lazy val value: V = compute() }
 
-  private val map = new ConcurrentHashMap[(SparkSession, String), Holder]()
-  private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
-  SessionScoped.register(this)
+  def getOrCompute(s: SparkSession, key: String)(compute: => V): V =
+    SessionScoped.releaseScoped(s)
+      .computeIfAbsent((this, key), _ => new Holder(() => compute))
+      .asInstanceOf[Holder].value
 
-  private def hook(s: SparkSession): Unit =
-    if (hooked.add(s)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          evict(s)
-          hooked.remove(s) // only here — see evict's duplicate-guard note
-        }
-      })
-    }
-
-  def getOrCompute(s: SparkSession, key: String)(compute: => V): V = {
-    hook(s)
-    // holder allocation is lock-cheap; forcing `value` (the real work,
-    // possibly multi-job) happens outside the map's bin lock, and any
-    // concurrent caller for the same key blocks on the holder's lazy init
-    map.computeIfAbsent((s, key), _ => new Holder(() => compute)).value
+  private def isMine(k: AnyRef): Boolean = k match {
+    case (owner: AnyRef, _) => owner eq this
+    case _ => false
   }
 
   /** All live values across sessions (e.g. oracle generation, which runs
     * after the queries and has no session handle of its own). */
-  def allValues: Seq[V] = {
-    val out = Seq.newBuilder[V]
-    map.values().forEach(v => out += v.value)
-    out.result()
-  }
+  def allValues: Seq[V] =
+    SessionScoped.releaseScopedValues(isMine).map(_.asInstanceOf[Holder].value)
 
-  /** Entries for `s`, e.g. to release staged frames before dropping them. */
-  def valuesFor(s: SparkSession): Seq[V] = {
-    val it = map.entrySet().iterator()
-    val out = Seq.newBuilder[V]
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) out += e.getValue.value
-    }
-    out.result()
-  }
+  /** Drop this memo's entries for `s` ahead of a session-wide release. */
+  def evict(s: SparkSession): Unit =
+    SessionScoped.releaseScoped(s).keySet().removeIf(isMine)
 
-  def evict(s: SparkSession): Unit = {
-    val it = map.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 eq s) it.remove()
-    // `hooked` membership is NOT cleared here: the application-end
-    // listener stays registered on the shared bus either way, so
-    // removing the guard would make the next getOrCompute on a live
-    // session register a DUPLICATE listener — hundreds of releaseAll →
-    // reuse cycles (the bench loop) would accumulate thousands of
-    // listeners, each iterated per event. The entry dies with the
-    // session via the listener itself.
-  }
-
-  def size: Int = map.size()
+  def size: Int = SessionScoped.releaseScopedValues(isMine).size
 }
 
+/** The session registry: every session-lifetime entry the engine keeps
+  * lives here, under ONE written contract.
+  *
+  *  - Entries are keyed by session, and each has one of two lifetimes:
+  *    - RELEASE-SCOPED ([[releaseScoped]]): the frames `Stage` tracks and
+  *      the leaves it handed out over them, [[SessionScoped]] memos
+  *      (OsmPipeline's relation memos, OsmQueries' shared pipeline, the
+  *      query objects' caches). `Stage.releaseAll(session)` unpersists the
+  *      tracked frames and drops every release-scoped entry of the
+  *      session. A memo that outlived its staged frame's cache would hand
+  *      out an unpersisted DataFrame that recomputes from source on every
+  *      action; dropping it instead makes the first access after a release
+  *      recompute and re-stage (REBUILD-ON-TOUCH). Dropping also frees
+  *      whatever the entries held, so a released pipeline can be collected.
+  *    - SESSION-SCOPED ([[sessionScoped]]): `Tables`' metadata memo (the
+  *      resolved plan of a parquet or JSONL path, re-checked against a
+  *      path snapshot on every access). It survives `releaseAll`: it pins
+  *      no cache, and the bench harness releases after every query while
+  *      re-resolving a table costs 60–110 ms.
+  *  - Both lifetimes end with the application: ONE `SparkListener` per
+  *    `SparkContext`, registered when the context's first session touches
+  *    the registry, drops every entry of that context's sessions at
+  *    `onApplicationEnd`. It closes over the context, never a session.
+  *    This is the engine's only application-end listener (tools/tripwire.sh
+  *    fails on another one under src/main/scala).
+  */
 object SessionScoped {
-  // weak set: an instance is only a query-object static today, but a
-  // dropped instance must not be pinned here forever
-  private val instances = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SessionScoped[_], java.lang.Boolean]())
+  private final class Entries {
+    val release = new ConcurrentHashMap[AnyRef, AnyRef]()
+    val session = new ConcurrentHashMap[AnyRef, AnyRef]()
+  }
+  private val sessions = new ConcurrentHashMap[SparkSession, Entries]()
+  private val hooked = ConcurrentHashMap.newKeySet[SparkContext]()
 
-  private def register(i: SessionScoped[_]): Unit = {
-    instances.synchronized { instances.add(i) }
-    hookOnce
+  private final class ContextEnd(sc: SparkContext) extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+      sessions.keySet().removeIf(_.sparkContext eq sc)
+      hooked.remove(sc)
+    }
   }
 
-  // one global Stage hook, installed on first instance construction
-  private lazy val hookOnce: Unit =
-    Stage.onReleaseAllGlobal { s =>
-      val snapshot = instances.synchronized {
-        val b = Seq.newBuilder[SessionScoped[_]]
-        instances.forEach(b += _)
-        b.result()
-      }
-      snapshot.foreach(_.evict(s))
-    }
+  private def entries(s: SparkSession): Entries = {
+    val sc = s.sparkContext
+    if (hooked.add(sc)) sc.addSparkListener(new ContextEnd(sc))
+    sessions.computeIfAbsent(s, _ => new Entries)
+  }
+
+  /** `s`'s release-scoped entries. Keys must not collide across owners:
+    * key by the owner (an instance or object) plus the owner's own key. */
+  private[ops] def releaseScoped(s: SparkSession)
+      : ConcurrentHashMap[AnyRef, AnyRef] = entries(s).release
+
+  /** `s`'s session-scoped entries (same keying rule). */
+  private[graft] def sessionScoped(s: SparkSession)
+      : ConcurrentHashMap[AnyRef, AnyRef] = entries(s).session
+
+  /** Drop every release-scoped entry of `s` (Stage.releaseAll's last step,
+    * after it unpersisted the tracked frames). */
+  private[ops] def dropReleaseScoped(s: SparkSession): Unit = {
+    val e = sessions.get(s)
+    if (e != null) e.release.clear()
+  }
+
+  /** Release-scoped values, across sessions, whose key passes `p`. */
+  private[ops] def releaseScopedValues(p: AnyRef => Boolean): Seq[AnyRef] = {
+    val out = Seq.newBuilder[AnyRef]
+    sessions.values().forEach(_.release.forEach((k, v) => if (p(k)) out += v))
+    out.result()
+  }
 }

@@ -1,8 +1,7 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Staging barrier for self-joined intermediates.
@@ -24,38 +23,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the authoritative list of such ops is `grep -rl Stage.barrier
   *    src/main/scala` (it has grown every round; a prose list here kept
   *    drifting stale).
-  *  - the cached blocks stay pinned until released. Every barrier is
-  *    tracked per session; call [[releaseAll]] when a batch of staged
-  *    queries is done (or [[release]] for one frame). Tracking is dropped
-  *    automatically when the session's context ends.
-  *  - holders that MEMOIZE staged frames (OsmPipeline's relation memos,
-  *    SessionScoped caches) register an [[onReleaseAll]] hook so a
-  *    session-wide release also invalidates the memo — otherwise the
-  *    memo would keep handing out an unpersisted frame that silently
-  *    recomputes from source on every action instead of re-staging.
-  *    Rebuild-on-touch is the contract: the first access after a release
-  *    re-runs the barrier.
+  *  - the cached blocks stay pinned until released. Every staged frame is
+  *    a RELEASE-SCOPED entry of the session registry ([[SessionScoped]]'s
+  *    companion, which writes the contract down): call [[releaseAll]] when
+  *    a batch of staged queries is done, [[release]] for one frame, or wrap
+  *    a loop iteration in [[scoped]]. All three go through one per-frame
+  *    release (unpersist, untrack, drop the leaves handed out over the
+  *    frame). The registry's one per-context listener drops what is left
+  *    when the application ends.
+  *  - holders that MEMOIZE staged frames do so in the same registry
+  *    (OsmPipeline's relation memos and every [[SessionScoped]] memo are
+  *    release-scoped entries), so [[releaseAll]] drops the memo with the
+  *    cache — otherwise the memo would keep handing out an unpersisted
+  *    frame that silently recomputes from source on every action instead
+  *    of re-staging. Rebuild-on-touch is the contract: the first access
+  *    after a release re-runs the barrier.
   */
 object Stage {
-  private val staged =
-    new ConcurrentHashMap[SparkSession, java.util.Set[DataFrame]]()
-  private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
-  private val releaseHooks =
-    new ConcurrentHashMap[SparkSession, java.util.Set[() => Unit]]()
-  private val globalReleaseHooks =
-    ConcurrentHashMap.newKeySet[SparkSession => Unit]()
+  // release-scoped registry keys (disjoint from every other owner's):
+  // a tracked staged frame; a handed-out leaf → (original cached frame,
+  // cache-entry key), since release(leaf) must unpersist through the
+  // ORIGINAL (the leaf's own plan matches no CacheManager entry); a cache
+  // entry (InMemoryRelation) → its ONE opaque base leaf, since repeated
+  // barriers over plan-equal inputs must return PLAN-EQUAL frames (same
+  // LogicalRDD), or every downstream re-barrier would be a cache miss on
+  // the second rep
+  private final case class Tracked(cached: DataFrame)
+  private final case class Leaf(leaf: DataFrame)
+  private final case class EntryLeaf(entry: AnyRef)
 
-  // leaf frame → (original cached frame, cache-entry key): release(leaf)
-  // must unpersist through the ORIGINAL (the leaf's own plan matches no
-  // CacheManager entry) and drop the entry's memoized base leaf
-  private val leafOriginal =
-    new ConcurrentHashMap[DataFrame, (DataFrame, AnyRef)]()
-  // cache entry (InMemoryRelation instance) → its ONE opaque base leaf:
-  // repeated barriers over plan-equal inputs must return PLAN-EQUAL
-  // frames (same LogicalRDD), or every downstream re-barrier would be a
-  // cache miss on the second rep
-  private val entryLeaf =
-    new ConcurrentHashMap[AnyRef, DataFrame]()
+  private def registry(s: SparkSession) = SessionScoped.releaseScoped(s)
 
   def barrier(df: DataFrame): DataFrame = barrierCounted(df)._1
 
@@ -91,8 +88,8 @@ object Stage {
     // with the caller's column names restored per call (cache lookup
     // ignores names). Lifecycle caveat: a caller that retains a leaf
     // across releaseAll and re-reads it will re-materialize the cache
-    // untracked — memoized holders already drop their references via the
-    // release hooks, which is the documented holder contract.
+    // untracked — memoized holders are registry entries that releaseAll
+    // drops, which is the documented holder contract.
     (leafed(cached), n)
   }
 
@@ -117,11 +114,13 @@ object Stage {
       case Some(entry) if bridge.entrySizeBytes(entry) <=
           BigInt(cached.sparkSession.conf
             .get("graft.stage.leafMaxBytes", (64L << 20).toString).toLong) =>
-        val base = entryLeaf.computeIfAbsent(entry,
-          e => bridge.opaqueLeafOver(e, cached.sparkSession))
+        val m = registry(cached.sparkSession)
+        val base = m.computeIfAbsent(EntryLeaf(entry),
+          _ => bridge.opaqueLeafOver(entry, cached.sparkSession))
+          .asInstanceOf[DataFrame]
         val named =
           base.toDF(cached.queryExecution.analyzed.output.map(_.name): _*)
-        leafOriginal.put(named, (cached, entry))
+        m.put(Leaf(named), (cached, entry))
         named
       case _ => cached
     }
@@ -159,74 +158,59 @@ object Stage {
     * seal pair is an intra-op pattern, not a public lifecycle. */
   def seal(cached: DataFrame): DataFrame = leafed(cached)
 
-  /** Run `h` every time [[releaseAll]] fires for session `s` — the memo-
-    * invalidation side of the release contract (see LIFECYCLE). Hooks live
-    * until the session's context ends. */
-  def onReleaseAll(s: SparkSession, h: () => Unit): Unit = {
-    ensureHooked(s)
-    releaseHooks
-      .computeIfAbsent(s, _ => ConcurrentHashMap.newKeySet[() => Unit]())
-      .add(h)
-  }
+  private def track(df: DataFrame): Unit =
+    registry(df.sparkSession).put(Tracked(df), df)
 
-  /** Like [[onReleaseAll]] but for every session — used by class-level
-    * registries (SessionScoped) that exist before any session does. */
-  def onReleaseAllGlobal(h: SparkSession => Unit): Unit =
-    globalReleaseHooks.add(h)
+  private def tracked(s: SparkSession): Seq[DataFrame] =
+    registry(s).keySet().asScala.toSeq.collect { case Tracked(df) => df }
 
-  private def ensureHooked(s: SparkSession): Unit =
-    if (hooked.add(s)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          staged.remove(s); releaseHooks.remove(s); hooked.remove(s)
-        }
-      })
+  /** The one per-frame release behind [[release]], [[scoped]] and
+    * [[releaseAll]]: unpersist a tracked (or any cached) frame and drop its
+    * registry entries — the frame itself, every leaf handed out over it
+    * and their cache entry's base leaf. */
+  private def unstage(cached: DataFrame): Unit = {
+    val m = registry(cached.sparkSession)
+    m.remove(Tracked(cached))
+    m.entrySet().removeIf { e =>
+      (e.getKey, e.getValue) match {
+        case (Leaf(_), (orig: AnyRef, entry: AnyRef)) if orig eq cached =>
+          m.remove(EntryLeaf(entry))
+          true
+        case _ => false
+      }
     }
-
-  private def track(df: DataFrame): Unit = {
-    val s = df.sparkSession
-    ensureHooked(s)
-    staged.computeIfAbsent(s, _ => ConcurrentHashMap.newKeySet[DataFrame]())
-      .add(df)
+    cached.unpersist(blocking = false)
   }
 
   /** Unpersist one staged frame and stop tracking it. Consumers that read
     * it afterwards recompute from source — release only after the staged
     * results are no longer needed. */
-  def release(df: DataFrame): Unit = {
+  def release(df: DataFrame): Unit =
     // a barrier-returned LEAF unpersists through its original frame (the
-    // leaf's plan matches no CacheManager entry); anything else as before
-    val mapped = leafOriginal.remove(df)
-    val target = if (mapped != null) { entryLeaf.remove(mapped._2); mapped._1 }
-                 else df
-    target.unpersist()
-    val set = staged.get(target.sparkSession)
-    if (set != null) set.remove(target)
-  }
-
-  /** Unpersist every frame staged in `s` since the last release, after
-    * first firing the registered memo-invalidation hooks (so holders drop
-    * their references and re-stage on next touch rather than silently
-    * recomputing from source). */
-  def releaseAll(s: SparkSession): Unit = {
-    globalReleaseHooks.forEach(h => h(s))
-    val hooks = releaseHooks.get(s)
-    if (hooks != null) hooks.forEach(h => h())
-    val set = staged.remove(s)
-    if (set != null) set.forEach(_.unpersist())
-    // drop this session's leaf bookkeeping (the originals just released)
-    leafOriginal.entrySet().removeIf { e =>
-      val mine = e.getValue._1.sparkSession eq s
-      if (mine) entryLeaf.remove(e.getValue._2)
-      mine
+    // leaf's plan matches no CacheManager entry); anything else as is
+    registry(df.sparkSession).get(Leaf(df)) match {
+      case (orig, _) => unstage(orig.asInstanceOf[DataFrame])
+      case _ => unstage(df)
     }
+
+  /** Unpersist every frame staged in `s` and drop every release-scoped
+    * registry entry of `s`, memos included, so holders re-stage on next
+    * touch rather than silently recomputing from source. */
+  def releaseAll(s: SparkSession): Unit = {
+    tracked(s).foreach(unstage)
+    SessionScoped.dropReleaseScoped(s)
   }
 
   /** Currently-tracked barrier count for `s` (diagnostics / specs). */
-  def stagedCount(s: SparkSession): Int = {
-    val set = staged.get(s)
-    if (set == null) 0 else set.size()
-  }
+  def stagedCount(s: SparkSession): Int = tracked(s).size
+
+  /** Leaf bookkeeping entries `s` holds (handed-out leaves and base
+    * leaves) — specs check that a release drops them. */
+  private[ops] def leafEntries(s: SparkSession): Int =
+    registry(s).keySet().asScala.count {
+      case Leaf(_) | EntryLeaf(_) => true
+      case _ => false
+    }
 
   /** Run `body`, then release every barrier it staged — the bounded
     * per-iteration lifecycle a LONG-RUNNING loop needs (a foreachBatch
@@ -240,25 +224,11 @@ object Stage {
     * (rebuild-on-touch) but it forfeits that frame's staging; keep
     * scopes to single-threaded loops. */
   def scoped[A](s: SparkSession)(body: => A): A = {
-    val before = {
-      val set = staged.get(s)
-      if (set == null) java.util.Collections.emptySet[DataFrame]()
-      else new java.util.HashSet[DataFrame](set)
-    }
+    val before = tracked(s).toSet
     try body
-    finally {
-      val set = staged.get(s)
-      if (set != null) {
-        val it = set.iterator()
-        while (it.hasNext) {
-          val df = it.next()
-          if (!before.contains(df)) {
-            try df.unpersist(blocking = false)
-            catch { case _: Throwable => }
-            it.remove()
-          }
-        }
-      }
+    finally tracked(s).filterNot(before).foreach { df =>
+      try unstage(df)
+      catch { case _: Throwable => }
     }
   }
 }

@@ -19,29 +19,14 @@ import org.apache.spark.sql.functions._
 final case class OsmPipeline(spark: SparkSession, osmPath: String,
     officialPath: String, quarantineDir: Option[String] = None) {
 
-  /** Resettable per-relation memo: like a `lazy val`, but [[release]] (or
-    * a session-wide `Stage.releaseAll`) invalidates it so the NEXT access
-    * rebuilds — and re-stages — the relation instead of handing out a
-    * frame whose cache was unpersisted (which would silently recompute
-    * from source on every action). */
-  private final class Memo[T](compute: () => T) {
-    private var v: Option[T] = None
-    def apply(): T = synchronized {
-      if (v.isEmpty) v = Some(compute())
-      v.get
-    }
-    def invalidate(): Unit = synchronized { v = None }
-  }
-  private val memos =
-    new java.util.concurrent.CopyOnWriteArrayList[Memo[_]]()
-  private def memo[T](f: => T): Memo[T] = {
-    val m = new Memo(() => f)
-    memos.add(m)
-    m
-  }
-  // a session-wide release must also invalidate this pipeline's memos —
-  // see Stage LIFECYCLE
-  graft.ops.Stage.onReleaseAll(spark, () => memos.forEach(_.invalidate()))
+  // Relation memos: release-scoped registry entries keyed by THIS
+  // instance (see Stage LIFECYCLE), so `Stage.releaseAll` drops them and
+  // the NEXT access rebuilds — and re-stages — the relation instead of
+  // handing out a frame whose cache was unpersisted (which would silently
+  // recompute from source on every action).
+  private val staged = new graft.ops.SessionScoped[DataFrame]
+  private def memo(name: String)(f: => DataFrame): () => DataFrame =
+    () => staged.getOrCompute(spark, name)(f)
 
   /** Drop every relation this session has staged (wired to
     * `Stage.releaseAll`, so it is SESSION-wide: other staged queries in
@@ -53,7 +38,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   /** The audit scripts probe the UNCORRECTED list (SURVEY.md §3.2).
     * Cached: the corrected list derives from it, so the PSI XML parses
     * once for both pipelines. */
-  private val officialUncorrectedM = memo(
+  private val officialUncorrectedM = memo("officialUncorrected")(
     graft.ops.Stage.barrier(OfficialList.cleaned(spark, officialPath)))
   def officialUncorrected: DataFrame = officialUncorrectedM()
 
@@ -105,20 +90,22 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
         raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
     }
 
-  private val rawNodesM = memo(stagedRaw("nodes",
+  private val rawNodesM = memo("rawNodes")(stagedRaw("nodes",
     OsmIngest.rawNodes(spark, osmPath),
     OsmIngest.rawNodesPermissive(spark, osmPath)))
   private def rawNodes = rawNodesM()
-  private val rawWaysM = memo(stagedRaw("ways",
+  private val rawWaysM = memo("rawWays")(stagedRaw("ways",
     OsmIngest.rawWays(spark, osmPath),
     OsmIngest.rawWaysPermissive(spark, osmPath)))
   private def rawWays = rawWaysM()
 
   // nodes/ways appear in several branches of one exploration job
   // (counts + distinct_users + contribution joins) — barrier, not cache
-  private val nodesM = memo(graft.ops.Stage.barrier(OsmIngest.nodes(rawNodes)))
+  private val nodesM =
+    memo("nodes")(graft.ops.Stage.barrier(OsmIngest.nodes(rawNodes)))
   def nodes: DataFrame = nodesM()
-  private val waysM = memo(graft.ops.Stage.barrier(OsmIngest.ways(rawWays)))
+  private val waysM =
+    memo("ways")(graft.ops.Stage.barrier(OsmIngest.ways(rawWays)))
   def ways: DataFrame = waysM()
   def wayNodes: DataFrame = OsmIngest.wayNodes(rawWays)
 
@@ -134,7 +121,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
       PhoneFix.fixPhones(OsmIngest.tagArray).as("tags"))
 
   /** Nodes fixed per element: (id, tags, phone_updated). */
-  private val nodesFixedM = memo(graft.ops.Stage.barrier(
+  private val nodesFixedM = memo("nodesFixed")(graft.ops.Stage.barrier(
     phoneFixed(rawNodes).select(col("id"), col("tags"),
       PhoneFix.phoneUpdated(col("tags")).as("phone_updated"))))
 
@@ -142,7 +129,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     * order, parse_clean_and_csv.py:260,272-273):
     * (id, tags, phone_updated, name_updated). The official lookup is the
     * only relation that moves (grouped by name, broadcast). */
-  private val waysFixedM = memo {
+  private val waysFixedM = memo("waysFixed") {
     val fixed = StreetNameFix.fixStreetNames(phoneFixed(rawWays), lookup)
     graft.ops.Stage.barrier(fixed.select(col("id"), col("tags"),
       PhoneFix.phoneUpdated(col("tags")).as("phone_updated"),
@@ -168,7 +155,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     * (parse_clean_and_csv.py:263-290): a narrow union of the per-element
     * flags. Phone flags replicate the reference's last-writer-wins quirk
     * exactly (see PhoneFix). */
-  private val updateHistoryM = memo {
+  private val updateHistoryM = memo("updateHistory") {
     def flagged(elements: DataFrame, flag: String, kind: String,
         field: String): DataFrame =
       elements.filter(col(flag)).select(col("id"),
@@ -186,7 +173,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     * in ORDERED form (document-order metadata) so the census can replay
     * the reference's first-seen character order; [[phoneAuditRows]] is the
     * public reference row shape. */
-  private val phoneAuditM = memo(graft.ops.Stage.barrier(
+  private val phoneAuditM = memo("phoneAudit")(graft.ops.Stage.barrier(
     Audits.phoneNumbersOrdered(rawNodeTags, rawWayTags)))
   def phoneAudit: DataFrame = phoneAuditM()
 

@@ -31,12 +31,13 @@ object OsmQueries {
   val PsiPath: String = graft.osm.OsmInputs.official
 
   // One pipeline per session — queries share the staged relations (each
-  // `lazy val` in OsmPipeline materializes its cache on first access via
-  // Stage.barrier, so every query pays exactly for what it touches).
-  private val pipelines =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, OsmPipeline]()
+  // relation memo in OsmPipeline materializes its cache on first access
+  // via Stage.barrier, so every query pays exactly for what it touches).
+  // Release-scoped like those memos: Stage.releaseAll drops the pipeline
+  // with them, and the next query builds a fresh one.
+  private val sharedPipeline = new graft.ops.SessionScoped[OsmPipeline]
   private def pipe(s: SparkSession): OsmPipeline =
-    pipelines.computeIfAbsent(s, OsmPipeline(_, OsmPath, PsiPath))
+    sharedPipeline.getOrCompute(s, OsmPath)(OsmPipeline(s, OsmPath, PsiPath))
 
   /** The session's shared pipeline, for [[OsmOracleExport]]'s relation
     * dump — same staged scans, no extra XML parse. */

@@ -34,10 +34,8 @@ class StageSpec extends SparkSpec {
     assert(v == 3) // recomputed after eviction
   }
 
-  test("releaseAll unpersists everything, fires hooks, and memoized " +
-      "holders rebuild-on-touch") {
-    var hookFired = 0
-    Stage.onReleaseAll(spark, () => hookFired += 1)
+  test("releaseAll unpersists everything and memoized holders " +
+      "rebuild-on-touch") {
     // a SessionScoped memo over a staged frame — the pattern OsmQueries
     // and the ANN centroid cache use
     val scoped = new SessionScoped[org.apache.spark.sql.DataFrame]
@@ -53,7 +51,6 @@ class StageSpec extends SparkSpec {
     assert(org.apache.spark.sql.graftbridge.Bridge.isCachedLeaf(first))
 
     Stage.releaseAll(spark)
-    assert(hookFired == 1)
     assert(Stage.stagedCount(spark) == 0) // between-queries invariant
     // the memo was evicted with the cache: next touch re-computes AND
     // re-stages, rather than handing back the unpersisted frame
@@ -62,7 +59,56 @@ class StageSpec extends SparkSpec {
     assert(org.apache.spark.sql.graftbridge.Bridge.isCachedLeaf(second))
     assert(second.count() == 50)
     Stage.releaseAll(spark)
-    assert(hookFired == 2) // hooks persist across release cycles
+  }
+
+  test("scoped drops the leaf bookkeeping of the frames it releases") {
+    val leavesBefore = Stage.leafEntries(spark)
+    val stagedBefore = Stage.stagedCount(spark)
+    Stage.scoped(spark) {
+      val leaf = Stage.barrier(
+        spark.range(25).toDF("n").withColumn("k", col("n") % 3))
+      assert(org.apache.spark.sql.graftbridge.Bridge.isCachedLeaf(leaf))
+      assert(Stage.leafEntries(spark) > leavesBefore)
+    }
+    assert(Stage.leafEntries(spark) == leavesBefore)
+    assert(Stage.stagedCount(spark) == stagedBefore)
+  }
+
+  test("a barrier whose materializing count throws rethrows, tracks " +
+      "nothing and leaves no cache entry") {
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    val stagedBefore = Stage.stagedCount(spark)
+    val failing = spark.range(20).toDF("n").withColumn("m",
+      when(col("n") === 13, raise_error(lit("injected barrier failure")))
+        .otherwise(col("n")))
+    val e = intercept[Exception](Stage.barrier(failing))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("injected barrier failure")))
+    assert(Stage.stagedCount(spark) == stagedBefore)
+    assert(org.apache.spark.sql.graftbridge.Bridge.cachedEntry(failing)
+      .isEmpty)
+  }
+
+  test("a fresh session that stages, resolves a table and fills two " +
+      "memos adds no listener beyond the registry's one per context") {
+    val sc = spark.sparkContext
+    val path = java.nio.file.Files.createTempDirectory("graft-listeners")
+      .resolve("t").toString
+    spark.range(3).write.parquet(path)
+    val fresh = spark.newSession()
+    val before = org.apache.spark.ListenerBusListeners(sc).size
+    assert(Stage.barrier(fresh.range(5).toDF("n")).count() == 5)
+    assert(graft.Tables.resolved(fresh, path).count() == 3)
+    val a = new SessionScoped[java.lang.Integer]
+    val b = new SessionScoped[java.lang.Integer]
+    assert(a.getOrCompute(fresh, "k")(1) == 1)
+    assert(b.getOrCompute(fresh, "k")(2) == 2)
+    val after = org.apache.spark.ListenerBusListeners(sc)
+    assert(after.size <= before + 1, s"${after.size - before} listeners added")
+    assert(after.count(_.getClass.getName ==
+      "graft.ops.SessionScoped$ContextEnd") == 1)
+    Stage.releaseAll(fresh)
   }
 
   test("SessionScoped serializes racing computes: one winner, no discard") {

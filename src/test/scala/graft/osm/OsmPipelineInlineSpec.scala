@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
+import graft.ops.Stage
 
 /** The whole fix chain on a hand-written OSM v0.6 document and official
   * list, with every expected row written out by hand from the reference's
@@ -99,16 +100,18 @@ class OsmPipelineInlineSpec extends SparkSpec {
       |</Root>
       |""".stripMargin
 
-  private lazy val pipeline = {
+  private lazy val inputs: (String, String) = {
     val dir = Files.createTempDirectory("graft-osm-inline")
     def write(name: String, s: String): String = {
       val f = dir.resolve(name)
       Files.write(f, s.getBytes(StandardCharsets.UTF_8))
       f.toString
     }
-    OsmPipeline(spark, write("map.osm", osmXml),
-      write("official.xml", officialXml))
+    (write("map.osm", osmXml), write("official.xml", officialXml))
   }
+  private def newPipeline(): OsmPipeline =
+    OsmPipeline(spark, inputs._1, inputs._2)
+  private lazy val pipeline = newPipeline()
 
   /** Rows as a sorted list of cell lists (duplicates kept). */
   private def rows(df: DataFrame): Seq[Seq[Any]] =
@@ -177,5 +180,37 @@ class OsmPipelineInlineSpec extends SparkSpec {
         "大街"),
       Seq("104", "McGregor Street", "McGregor Street", "麥加力歌街",
         "麥加力歌街", "Mcgregor Street", "麥加力歌街")))
+  }
+
+  test("release(): rows equal before and after, relations re-stage on " +
+      "touch") {
+    val history = rows(pipeline.updateHistory)
+    val tags = rows(pipeline.wayTags)
+    assert(Stage.stagedCount(spark) >= 2)
+    pipeline.release()
+    assert(Stage.stagedCount(spark) == 0)
+    assert(rows(pipeline.updateHistory) == history)
+    assert(rows(pipeline.wayTags) == tags)
+    assert(Stage.stagedCount(spark) >= 2)
+    pipeline.release()
+  }
+
+  test("a released pipeline is not retained by the session registry") {
+    // each pipeline is built, run and released inside this method, so
+    // after it returns only the registry could still reach it
+    def runAndRelease(): java.lang.ref.WeakReference[OsmPipeline] = {
+      val p = newPipeline()
+      assert(p.updateHistory.count() == 2)
+      Stage.releaseAll(spark)
+      new java.lang.ref.WeakReference(p)
+    }
+    val dropped = (1 to 5).map(_ => runAndRelease())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (dropped.exists(_.get != null) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(dropped.forall(_.get == null),
+      "a released OsmPipeline is still reachable")
   }
 }
