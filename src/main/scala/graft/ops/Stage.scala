@@ -38,6 +38,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    frame that silently recomputes from source on every action instead
   *    of re-staging. Rebuild-on-touch is the contract: the first access
   *    after a release re-runs the barrier.
+  *
+  * CONCURRENCY: [[overlap]] is the engine's one way to run eager work side
+  * by side (tools/tripwire.sh fails on another thread or a global
+  * execution context under src/main/scala).
   */
 object Stage {
   // release-scoped registry keys (disjoint from every other owner's):
@@ -229,6 +233,52 @@ object Stage {
     finally tracked(s).filterNot(before).foreach { df =>
       try unstage(df)
       catch { case _: Throwable => }
+    }
+  }
+
+  /** Run independent EAGER thunks (barriers, writes) side by side and
+    * return their results in thunk order. Each thunk runs on its own
+    * thread, created per call by the calling thread, so every thunk
+    * inherits the caller's Spark local properties (job group, job
+    * description, scheduler pool) and active session: its jobs are the
+    * caller's jobs to a listener or a `cancelJobGroup`.
+    *
+    * Every thunk runs to completion before `overlap` returns or throws.
+    * On failure it rethrows the first failed thunk's error (thunk order),
+    * with the other thunks' errors attached as suppressed. An interrupt
+    * of the caller is passed on to the thunks' threads, still waited for,
+    * and rethrown first.
+    *
+    * Thunks must not depend on each other except through memos that
+    * serialise compute per key ([[SessionScoped]]): a thunk that needs a
+    * relation another thunk is staging then blocks on its holder, and a
+    * dependency graph without cycles cannot deadlock. */
+  def overlap[A](thunks: Seq[() => A]): Seq[A] = {
+    val results = new Array[Any](thunks.size)
+    val failures = new Array[Throwable](thunks.size)
+    val threads = thunks.zipWithIndex.map { case (f, i) =>
+      val t = new Thread(() =>
+        try results(i) = f()
+        catch { case e: Throwable => failures(i) = e },
+        s"graft-overlap-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted: Option[InterruptedException] = None
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch {
+        case e: InterruptedException if interrupted.isEmpty =>
+          interrupted = Some(e)
+          threads.foreach(_.interrupt())
+        case _: InterruptedException =>
+      }
+    }
+    interrupted.toSeq ++ failures.filter(_ != null) match {
+      case Seq() => results.toSeq.map(_.asInstanceOf[A])
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
     }
   }
 }

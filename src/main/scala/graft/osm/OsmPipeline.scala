@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions._
   * rows never shuffle — only the small official list is grouped and
   * broadcast. The result equals a per-id regrouping of the shredded tags
   * whenever element ids are unique within a kind, as in an OSM extract.
+  *
+  * The ETL is a DAG, not a line: the node scan, the way scan and the
+  * official list do not depend on each other, nor do the node phone fix
+  * and the way street-name fix, nor the six CSV writes. [[writeCsvs]]
+  * runs them side by side through `Stage.overlap`; the relation memos
+  * (one per staged relation, compute serialised per key) resolve the
+  * dependencies, so each relation stages exactly once.
   */
 final case class OsmPipeline(spark: SparkSession, osmPath: String,
     officialPath: String, quarantineDir: Option[String] = None) {
@@ -197,17 +204,25 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   }
 
   /** K1 — write the six relations as headered UTF-8 CSVs under outDir
-    * (UnicodeDictWriter equivalent; parse_clean_and_csv.py:189-246). */
+    * (UnicodeDictWriter equivalent; parse_clean_and_csv.py:189-246).
+    *
+    * One `Stage.overlap` over the six writes plus the staging of
+    * [[officialUncorrected]]: the official list parses alongside the two
+    * single-task XML scans instead of behind the way scan, and the fixes
+    * and writes back-fill the cores as their inputs land. It is safe
+    * because every relation is a per-key memo whose compute is serialised:
+    * the first thread to touch a relation stages it, every other consumer
+    * blocks on its holder, and the memo graph (raw scans → shaped and
+    * fixed relations → update_history) has no cycle. A failed write is
+    * rethrown after the other writes have finished. */
   def writeCsvs(outDir: String): Unit = {
-    def w(df: DataFrame, name: String): Unit =
+    def w(df: => DataFrame, name: String): () => Unit = () =>
       df.write.mode("overwrite").option("header", "true")
         .csv(s"$outDir/$name")
-    w(nodes, "nodes")
-    w(nodeTags, "nodes_tags")
-    w(ways, "ways")
-    w(wayNodes, "ways_nodes")
-    w(wayTags, "ways_tags")
-    w(updateHistory, "update_history")
+    graft.ops.Stage.overlap(Seq(() => { officialUncorrected; () },
+      w(nodes, "nodes"), w(nodeTags, "nodes_tags"), w(ways, "ways"),
+      w(wayNodes, "ways_nodes"), w(wayTags, "ways_tags"),
+      w(updateHistory, "update_history")))
   }
 }
 

@@ -949,33 +949,27 @@ object DedupSim {
     val e = Tables(s, dir).embeddings
     // the truth barrier and the arms' internal staging barriers (LSH
     // buckets, IVF assignment) are INDEPENDENT eager jobs — build them
-    // from a small thread pool so their materializations overlap
+    // side by side (Stage.overlap) so their materializations overlap
     // (guide §2.6: concurrent independent jobs back-fill the scheduler
     // instead of paying four sequential action round-trips). Plan
     // construction and Stage's tracking are thread-safe; the combined
     // result below is identical to the sequential build.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // staged: the brute-force truth is the most expensive sub-plan and
     // feeds all three arms plus the total — one execution, not four
-    val truthF = Future(graft.ops.Stage.barrier(
-      Similarity.knnBrute(e, nQueries = 10, k = 5)
-        .select(col("query_id"), col("neighbor_id"))))
-    val armsF = Seq(
-      "lsh" -> Future(Similarity.knnLsh(e, nQueries = 10, k = 5)),
-      "ivf_static" ->
-        Future(graft.ops.Ivf.knnIvfStatic(e, nQueries = 10, k = 5)),
-      "sq8" -> Future(Similarity.knnQuantized(e, nQueries = 10, k = 5,
+    val Seq(truth, lsh, ivfStatic, sq8) = graft.ops.Stage.overlap(Seq(
+      () => graft.ops.Stage.barrier(Similarity.knnBrute(e, nQueries = 10,
+        k = 5).select(col("query_id"), col("neighbor_id"))),
+      () => Similarity.knnLsh(e, nQueries = 10, k = 5),
+      () => graft.ops.Ivf.knnIvfStatic(e, nQueries = 10, k = 5),
+      () => Similarity.knnQuantized(e, nQueries = 10, k = 5,
         shortlist = 32)))
-    val truth = Await.result(truthF, Duration.Inf)
     def arm(name: String, df: DataFrame): DataFrame =
       df.select(col("query_id"), col("neighbor_id"))
         .join(truth, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).cast("long").as("n_common"))
         .select(lit(name).as("method"), col("n_common"))
     val truthN = truth.agg(count(lit(1)).cast("long").as("n_truth"))
-    armsF.map { case (n, f) => arm(n, Await.result(f, Duration.Inf)) }
+    Seq(arm("lsh", lsh), arm("ivf_static", ivfStatic), arm("sq8", sq8))
       .reduce(_ unionByName _)
       .crossJoin(broadcast(truthN))
       .select(col("method"), col("n_truth"), col("n_common"),

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Self-sampling driver profiler (guide §7.3, in-process): runs a query
-  * once warm, then during a second rep samples the CALLING thread's stack
+  * once warm, then during a second rep samples the rep's thread's stack
   * every ~10 ms from a sampler thread and prints the hottest frames.
   * The driver gap JobCountDiag exposes (wall ≫ job-covered wall) is
   * single-threaded planning/analysis on this thread — the aggregate
@@ -30,7 +30,9 @@ object DriverProfDiag {
     fn(spark, sfDir).count() // second warm rep against rebuilt staging
     graft.ops.Stage.releaseAll(spark)
 
-    val target = Thread.currentThread()
+    // the timed rep and the sampler run side by side (Stage.overlap); the
+    // sampler waits for the rep's thread to announce itself
+    @volatile var target: Thread = null
     val counts = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicInteger]()
     // SPARK_GRAFT_PROF_STACKS=1: aggregate FULL stacks (top 14 frames)
@@ -43,7 +45,7 @@ object DriverProfDiag {
     val allThreads = sys.env.contains("SPARK_GRAFT_PROF_ALL")
     @volatile var run = true
     @volatile var nSamples = 0
-    val sampler = new Thread(() => {
+    val sampler = () => {
       while (run) {
         if (allThreads) {
           nSamples += 1
@@ -60,7 +62,8 @@ object DriverProfDiag {
             }
           }
           Thread.sleep(10)
-        } else samplerBody()
+        } else if (target != null) samplerBody()
+        else Thread.sleep(1)
       }
       def samplerBody(): Unit = {
         val st = target.getStackTrace
@@ -88,13 +91,16 @@ object DriverProfDiag {
         }
         Thread.sleep(10)
       }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    run = false
+      0.0
+    }
+    val timed = () => {
+      target = Thread.currentThread()
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).count()
+      finally run = false
+      (System.nanoTime() - t0) / 1e9
+    }
+    val wall = graft.ops.Stage.overlap(Seq(timed, sampler)).head
     import scala.jdk.CollectionConverters._
     println(f"""{"query":"$name","wall_sec":$wall%.2f,"samples":$nSamples}""")
     counts.asScala.toSeq.sortBy(-_._2.get).take(topN).foreach {

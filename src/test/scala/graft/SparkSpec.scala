@@ -34,4 +34,11 @@ abstract class SparkSpec extends AnyFunSuite {
     "Exchange ".r.findAllIn(p).size -
       "BroadcastExchange ".r.findAllIn(p).size
   }
+
+  /** Whether a `Stage.overlap` thread is still running. */
+  protected def overlapThreadsAlive: Boolean = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName.startsWith("graft-overlap-") && t.isAlive)
+  }
 }

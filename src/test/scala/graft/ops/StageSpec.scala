@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -187,5 +188,48 @@ class StageSpec extends SparkSpec {
       assert(agg.count() == 7)
       Stage.releaseAll(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("overlap runs each thunk under the caller's job group and active " +
+      "session and returns the results in thunk order") {
+    val sc = spark.sparkContext
+    val fresh = spark.newSession()
+    val prevActive = SparkSession.getActiveSession
+    sc.setJobGroup("stage-spec-overlap", "overlap spec")
+    SparkSession.setActiveSession(fresh)
+    try {
+      val out = Stage.overlap((0 until 4).map { i => () =>
+        Thread.sleep(60L * (3 - i)) // later thunks finish first
+        (i, sc.getLocalProperty("spark.jobGroup.id"),
+          SparkSession.active eq fresh, fresh.range(10 + i).count(),
+          Thread.currentThread().getName)
+      })
+      assert(out.map(_._1) == (0 until 4))
+      assert(out.forall(_._2 == "stage-spec-overlap"))
+      assert(out.forall(_._3), "a thunk lost the caller's active session")
+      assert(out.map(_._4) == (10L to 13L))
+      assert(out.map(_._5).distinct.size == 4) // one thread per thunk
+      assert(!out.map(_._5).contains(Thread.currentThread().getName))
+    } finally {
+      sc.clearJobGroup()
+      prevActive match {
+        case Some(s) => SparkSession.setActiveSession(s)
+        case None => SparkSession.clearActiveSession()
+      }
+    }
+    assert(!overlapThreadsAlive)
+  }
+
+  test("overlap rethrows the first failure only after every thunk has " +
+      "finished, the others suppressed, and leaves no thread behind") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](Stage.overlap(Seq(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(500); slowDone.set(true); 1 },
+      () => throw new IllegalArgumentException("second"))))
+    assert(slowDone.get, "rethrown before the slow sibling finished")
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    assert(!overlapThreadsAlive)
   }
 }

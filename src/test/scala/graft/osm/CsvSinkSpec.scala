@@ -10,8 +10,7 @@ import graft.SparkSpec
 class CsvSinkSpec extends SparkSpec {
 
   test("writeCsvs round-trips all six relations") {
-    val pipe = OsmPipeline(spark, "/root/reference/shatin.osm",
-      "/root/reference/PSI_Street Name_062017.xml")
+    val pipe = OsmPipeline(spark, OsmInputs.osm, OsmInputs.official)
     val out = Files.createTempDirectory("graft-csv").toString
     pipe.writeCsvs(out)
     def readBack(name: String) =

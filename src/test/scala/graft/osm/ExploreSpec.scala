@@ -7,8 +7,7 @@ import graft.SparkSpec
 class ExploreSpec extends SparkSpec {
 
   lazy val pipe: OsmPipeline = OsmPipeline(spark,
-    "/root/reference/shatin.osm",
-    "/root/reference/PSI_Street Name_062017.xml")
+    OsmInputs.osm, OsmInputs.official)
 
   test("DataFrame explore variants equal the SQL forms") {
     pipe.registerViews()

@@ -12,7 +12,7 @@ class MultiFileScanSpec extends SparkSpec {
   test("node scan distributes over a multi-file directory") {
     val dir = Files.createTempDirectory("graft-osm-shard")
     (1 to 4).foreach { i =>
-      Files.copy(Paths.get("/root/reference/shatin.osm"),
+      Files.copy(Paths.get(OsmInputs.osm),
         dir.resolve(s"part-$i.osm"), StandardCopyOption.REPLACE_EXISTING)
     }
     val nodes = OsmIngest.rawNodes(spark, dir.toString + "/*.osm")
@@ -57,8 +57,7 @@ class MultiFileScanSpec extends SparkSpec {
     // out even though the parse is one task, without paying max-core task
     // overhead on a small sample. shatin.osm is 3.7 MB → ceil = 4
     // partitions, which on this local[4] session is also the cap.
-    val pipe = OsmPipeline(spark, "/root/reference/shatin.osm",
-      "/root/reference/PSI_Street Name_062017.xml")
+    val pipe = OsmPipeline(spark, OsmInputs.osm, OsmInputs.official)
     val parts = pipe.nodes.rdd.getNumPartitions
     val expected = math.min(spark.sparkContext.defaultParallelism, 4)
     assert(parts >= expected,
@@ -68,7 +67,7 @@ class MultiFileScanSpec extends SparkSpec {
 
   test("quarantine: corrupt shard routes to the sink, clean rows unchanged") {
     val dir = Files.createTempDirectory("graft-osm-mixed")
-    Files.copy(Paths.get("/root/reference/shatin.osm"),
+    Files.copy(Paths.get(OsmInputs.osm),
       dir.resolve("clean.osm"), StandardCopyOption.REPLACE_EXISTING)
     val xml =
       """<?xml version="1.0" encoding="UTF-8"?>
@@ -84,7 +83,7 @@ class MultiFileScanSpec extends SparkSpec {
       xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val q = Files.createTempDirectory("graft-osm-quarantine").toString
     val pipe = OsmPipeline(spark, dir.toString + "/*.osm",
-      "/root/reference/PSI_Street Name_062017.xml", Some(q))
+      OsmInputs.official, Some(q))
     // shatin's 13,676 nodes + the one well-formed dirty-shard node survive
     assert(pipe.nodes.count() == 13676 + 1)
     assert(pipe.ways.count() == 1958)
@@ -103,7 +102,7 @@ class MultiFileScanSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "262144") // 256k
-      val nodes = OsmIngest.rawNodes(spark, "/root/reference/shatin.osm")
+      val nodes = OsmIngest.rawNodes(spark, OsmInputs.osm)
       assert(nodes.rdd.getNumPartitions == 1, "splitting behavior changed " +
         "— revisit OsmIngest's scan notes (this is good news)")
       val spread = nodes.repartition(8)

@@ -15,8 +15,8 @@ import graft.SparkSpec
   */
 class OsmGoldenSpec extends SparkSpec {
 
-  val osm = "/root/reference/shatin.osm"
-  val psi = "/root/reference/PSI_Street Name_062017.xml"
+  val osm = OsmInputs.osm
+  val psi = OsmInputs.official
 
   lazy val pipe: OsmPipeline = OsmPipeline(spark, osm, psi)
 

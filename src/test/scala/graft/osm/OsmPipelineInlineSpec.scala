@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 import graft.ops.Stage
@@ -113,6 +114,24 @@ class OsmPipelineInlineSpec extends SparkSpec {
     OsmPipeline(spark, inputs._1, inputs._2)
   private lazy val pipeline = newPipeline()
 
+  /** The six sinks `writeCsvs` writes, in its order, and their relations. */
+  private val sinks = Seq("nodes", "nodes_tags", "ways", "ways_nodes",
+    "ways_tags", "update_history")
+  private def relations(p: OsmPipeline): Seq[DataFrame] =
+    Seq(p.nodes, p.nodeTags, p.ways, p.wayNodes, p.wayTags, p.updateHistory)
+
+  /** Rows rendered as the all-string cells a CSV holds, sorted (a null and
+    * an empty cell read back alike). */
+  private def cells(df: DataFrame): Seq[Seq[String]] =
+    df.select(df.columns.toSeq.map(c => col(c).cast("string")): _*)
+      .collect().toSeq
+      .map(r => (0 until r.length).map(i => Option(r.getString(i))
+        .getOrElse("")))
+      .sortBy(_.mkString("\u0001"))
+
+  private def readCsv(dir: String, name: String): DataFrame =
+    spark.read.option("header", "true").csv(s"$dir/$name")
+
   /** Rows as a sorted list of cell lists (duplicates kept). */
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0001"))
@@ -212,5 +231,82 @@ class OsmPipelineInlineSpec extends SparkSpec {
     }
     assert(dropped.forall(_.get == null),
       "a released OsmPipeline is still reachable")
+  }
+
+  test("writeCsvs: the six CSVs read back equal the relations row for row") {
+    val out = Files.createTempDirectory("graft-osm-csv").toString
+    pipeline.writeCsvs(out)
+    sinks.zip(relations(pipeline)).foreach { case (name, df) =>
+      val back = readCsv(out, name)
+      assert(back.columns.toSeq == df.columns.toSeq, name)
+      val expected = cells(df)
+      assert(expected.nonEmpty, name)
+      assert(cells(back) == expected, name)
+    }
+    assert(!overlapThreadsAlive)
+  }
+
+  test("writeCsvs stages each relation once: as many staged frames as " +
+      "touching the same members one by one") {
+    Stage.releaseAll(spark)
+    newPipeline().writeCsvs(Files.createTempDirectory("graft-osm-csv").toString)
+    val concurrent = Stage.stagedCount(spark)
+    Stage.releaseAll(spark)
+    val p = newPipeline()
+    p.officialUncorrected
+    relations(p)
+    val oneByOne = Stage.stagedCount(spark)
+    Stage.releaseAll(spark)
+    assert(oneByOne > 0)
+    assert(concurrent == oneByOne)
+  }
+
+  test("writeCsvs rethrows a failed write after the other five finished") {
+    // Spark's overwrite deletes a regular file at the output path, so the
+    // nodes output path is made a link INTO a regular file: it can be
+    // neither deleted nor created
+    val out = Files.createTempDirectory("graft-osm-csv-fail")
+    val blocker = Files.write(out.resolve("blocker"),
+      "x".getBytes(StandardCharsets.UTF_8))
+    Files.createSymbolicLink(out.resolve("nodes"), blocker.resolve("sub"))
+    val e = intercept[Exception](newPipeline().writeCsvs(out.toString))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(s"$out/nodes")),
+      s"not the nodes write's error: $e")
+    sinks.filterNot(_ == "nodes").foreach { name =>
+      assert(Files.exists(out.resolve(name).resolve("_SUCCESS")),
+        s"$name had not finished when the error arrived")
+    }
+    assert(!overlapThreadsAlive)
+    Stage.releaseAll(spark)
+  }
+
+  test("a malformed node in a second file is quarantined; the concurrent " +
+      "sink writes the clean document's rows unchanged") {
+    val dirty =
+      """<?xml version="1.0" encoding="UTF-8"?>
+        |<osm version="0.6">
+        | <node id="9000000001" lat="22.41" lon="114.21" user="c" uid="9"
+        |       version="1" changeset="9"
+        |       timestamp="2017-01-01T00:00:00Z"><tag k="broken</node>
+        |</osm>
+        |""".stripMargin
+    val dir = Files.createTempDirectory("graft-osm-glob")
+    Files.write(dir.resolve("clean.osm"),
+      osmXml.getBytes(StandardCharsets.UTF_8))
+    Files.write(dir.resolve("dirty.osm"),
+      dirty.getBytes(StandardCharsets.UTF_8))
+    val q = Files.createTempDirectory("graft-osm-quarantine").toString
+    val clean = Files.createTempDirectory("graft-osm-csv").toString
+    val mixed = Files.createTempDirectory("graft-osm-csv").toString
+    newPipeline().writeCsvs(clean)
+    OsmPipeline(spark, s"$dir/*.osm", inputs._2, Some(q)).writeCsvs(mixed)
+    sinks.foreach { name =>
+      assert(cells(readCsv(mixed, name)) == cells(readCsv(clean, name)),
+        name)
+    }
+    assert(spark.read.text(s"$q/nodes").count() >= 1,
+      "the malformed node must land in quarantine")
+    Stage.releaseAll(spark)
   }
 }

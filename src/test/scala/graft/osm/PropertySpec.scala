@@ -103,8 +103,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("official list invariant: names unique per language after cleaning") {
-    val official = OfficialList.load(spark,
-      "/root/reference/PSI_Street Name_062017.xml").cache()
+    val official = OfficialList.load(spark, OsmInputs.official).cache()
     val n = official.count()
     assert(official.select("eng").distinct().count() == n)
     assert(official.select("chi").distinct().count() == n)

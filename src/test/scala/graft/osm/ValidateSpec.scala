@@ -5,8 +5,7 @@ import graft.SparkSpec
 class ValidateSpec extends SparkSpec {
 
   test("shatin pipeline passes every declared constraint") {
-    val pipe = OsmPipeline(spark, "/root/reference/shatin.osm",
-      "/root/reference/PSI_Street Name_062017.xml")
+    val pipe = OsmPipeline(spark, OsmInputs.osm, OsmInputs.official)
     val report = Validate.report(spark, pipe).collect()
     assert(report.isEmpty,
       report.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", "))

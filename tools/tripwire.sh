@@ -13,6 +13,12 @@
 # (graft.ops.SessionScoped's companion), whose single per-context listener
 # is the only place SparkListenerApplicationEnd may appear.
 #
+# It also refuses a second concurrency path under src/main/scala:
+# independent eager work runs side by side only through graft.ops.Stage's
+# overlap (threads created per call, so they inherit the caller's Spark
+# job group), so neither ExecutionContext.Implicits.global nor
+# `new Thread(` may appear outside src/main/scala/graft/ops/Stage.scala.
+#
 # Usage: tools/tripwire.sh
 set -e
 cd "$(dirname "$0")/.."
@@ -20,6 +26,13 @@ registry=src/main/scala/graft/ops/SessionScoped.scala
 stray=$(grep -rl SparkListenerApplicationEnd src/main/scala | grep -vx "$registry" || true)
 if [ -n "$stray" ]; then
   echo "tripwire: SparkListenerApplicationEnd outside $registry:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+stage=src/main/scala/graft/ops/Stage.scala
+stray=$(grep -rlE 'ExecutionContext\.Implicits\.global|new Thread\(' src/main/scala | grep -vx "$stage" || true)
+if [ -n "$stray" ]; then
+  echo "tripwire: a thread or global execution context outside $stage:" >&2
   echo "$stray" >&2
   exit 1
 fi
