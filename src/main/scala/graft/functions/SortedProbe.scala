@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * census once per band per joined candidate row. As an
   * `array_contains` over an unsorted struct array that probe is
   * O(|census|) per band — measured ~3× on the whole operator at a
-  * 2,400-entry census (tools/LshRailBench, BENCH_NOTES r15). Binary
+  * 2,400-entry census (BENCH_NOTES r15). Binary
   * search over a per-band sorted key array bounds it at O(log|census|),
   * flattening the fired-rail cost back to the clean path's. */
 object SortedProbe {

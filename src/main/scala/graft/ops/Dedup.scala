@@ -184,13 +184,10 @@ object Dedup {
   private def phash(c: Column): Column =
     graft.functions.GraftFunctions.polyHash(c)
 
-  /** Deterministic (aᵢ, bᵢ) coefficients, exposed so the DuckDB oracle can
-    * render the identical hash family as SQL literals. */
-  private[graft] def minhashCoeffs(k: Int, seed: Long = 7L): Seq[(Long, Long)] =
-    coeffs(k, seed)
-
-  /** Deterministic (aᵢ, bᵢ) coefficients for h_i(x) = (aᵢ·x + bᵢ) mod P. */
-  private def coeffs(k: Int, seed: Long): Seq[(Long, Long)] = {
+  /** Deterministic (aᵢ, bᵢ) coefficients for h_i(x) = (aᵢ·x + bᵢ) mod P,
+    * exposed so the DuckDB oracle can render the identical hash family as
+    * SQL literals. */
+  private[graft] def minhashCoeffs(k: Int, seed: Long = 7L): Seq[(Long, Long)] = {
     var state = seed
     def next(): Long = {
       state = state * 6364136223846793005L + 1442695040888963407L
@@ -199,37 +196,18 @@ object Dedup {
     Seq.fill(k)((next(), next()))
   }
 
-  /** MinHash signatures: k universal hashes over portable polynomial
-    * shingle hashes, computed as k independent `min` aggregates over the
-    * exploded (doc, shingle) relation — partial aggregation makes the
-    * shuffle carry one k-vector per doc per partition, not per shingle. */
-  def minhashSignatures(docs: DataFrame, n: Int = 2, k: Int = 64,
-      textCol: String = "text"): DataFrame = {
-    val cs = coeffs(k, seed = 7L)
-    val base = docs.select(col("doc_id"),
-        explode(shingles(col(textCol), n)).as("shingle"))
-      .withColumn("h", phash(col("shingle")))
-    val mins = cs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * a + b, lit(P))).as(s"m$i")
-    }
-    base.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** [[minhashSignatures]] computed by the native Catalyst aggregate
+  /** MinHash signatures (doc_id, sig): k universal hashes
+    * h_i(x) = (aᵢ·x + bᵢ) mod P over the portable polynomial shingle
+    * hashes, computed by the native Catalyst aggregate
     * (functions.MinHashAgg) — ONE TypedImperativeAggregate with a
-    * primitive long[k] buffer instead of k min-columns. Identical output
-    * (same hash family, coefficients, and modulus); DedupSpec asserts
-    * equality. */
-  def minhashSignaturesNative(docs: DataFrame, n: Int = 2, k: Int = 64,
+    * primitive long[k] buffer, so partial aggregation ships one k-vector
+    * per doc per partition. The same recipe as the near-dup pipelines
+    * ([[hashedShingleRows]] + [[minhashSigsOf]]); NativeFunctionsSpec
+    * pins it bit-identical to k independent `min` columns over
+    * [[minhashCoeffs]]. */
+  def minhashSignatures(docs: DataFrame, n: Int = 2, k: Int = 64,
       textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"),
-        explode(shingles(col(textCol), n)).as("shingle"))
-      .groupBy(col("doc_id"))
-      .agg(graft.functions.MinHashAgg
-        .minhash(phash(col("shingle")), k, seed = 7L).as("sig"))
+    minhashSigsOf(hashedShingleRows(docs, n, textCol), k)
 
   /** One key Column per band of a `sig` signature column — the single
     * definition of the LSH band key, shared by [[bandRows]] (string keys
@@ -315,7 +293,7 @@ object Dedup {
     * `_ocn == 0` fast path keeping the never-fired case at one int
     * comparison. The r15 `array_contains` scan this replaced was
     * O(bands × |census|) and MEASURED ~3× on the whole operator at a
-    * ~2,400-entry census (LshRailBench, BENCH_NOTES r15); the sorted
+    * ~2,400-entry census (BENCH_NOTES r15); the sorted
     * probe flattens the fired-rail run back to clean-path cost —
     * fired-2,400 5.02 s vs clean 4.74 s, 1.06×, identical 7,930 pairs
     * (BENCH_NOTES r17). [[hammingNearDupPairs]]
@@ -374,8 +352,8 @@ object Dedup {
     // band j's array by BINARY SEARCH (functions.SortedProbe — codegen'd
     // static call), so a fired rail costs O(log |census_j|) per band
     // probe instead of the O(|census|) array_contains scan that measured
-    // ~3× on the whole operator at a 2,400-entry census (LshRailBench,
-    // BENCH_NOTES r15/r17). The single-row assembly below runs
+    // ~3× on the whole operator at a 2,400-entry census (BENCH_NOTES
+    // r15/r17). The single-row assembly below runs
     // interpreted HOFs over ONE row — free — and sort_array(asc) is
     // exactly the order SortedProbe.contains requires.
     val ocRow = overCap
@@ -449,7 +427,7 @@ object Dedup {
     * native aggregate (fixed seed 7 — the family the DuckDB oracles
     * render as literals). Shared by the same two pipelines as
     * [[hashedShingleRows]]. */
-  private[graft] def minhashSigsOf(sh: DataFrame, k: Int): DataFrame =
+  private def minhashSigsOf(sh: DataFrame, k: Int): DataFrame =
     sh.select(col("doc_id"), explode(col("sh")).as("h"))
       .groupBy(col("doc_id"))
       .agg(graft.functions.MinHashAgg.minhash(col("h"), k, seed = 7L)
@@ -567,26 +545,18 @@ object Dedup {
       pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
         org.apache.spark.sql.graftbridge.Bridge.isCachedLeaf(pairs)
     val proj = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
-    // HEAP-AWARE rail cap (r21, VERDICT r20 #2): the caller's (or conf's)
+    // HEAP-AWARE rail cap (r21, VERDICT r20 #2): the caller's
     // maxLocalEdges assumed a bench-sized driver heap; the effective cap
     // also budgets ~40 B/edge of transient driver cost (16 B of primitive
     // arrays + collect/result buffers) against 10% of the max heap, so a
     // small-heap driver degrades to the distributed rounds instead of
-    // OOMing. The cap is conf-tunable per deployment
-    // (`graft.components.maxLocalEdges`); at 8 GB heap the budget
-    // (~21M edges) sits above the 8M default, so local behavior is
-    // unchanged. The 8M default itself is the MEASURED knee
-    // (RailCapBench r21: a 32M cap collapsing sf1's 28M-edge rep graph
-    // driver-side reads 16.1 s vs 11.3 s for the distributed rounds).
-    // conf applies only when the caller took the DEFAULT — an explicit
-    // parameter (specs force 0 to pin the distributed rounds; routing
-    // callers pass measured values) always wins
-    val confCap = if (maxLocalEdges == (1L << 23))
-      pairs.sparkSession.conf
-        .get("graft.components.maxLocalEdges", maxLocalEdges.toString).toLong
-    else maxLocalEdges
+    // OOMing. At 8 GB heap the budget (~21M edges) sits above the 8M
+    // default, so local behavior is unchanged. The 8M default itself is
+    // the MEASURED knee (BENCH_NOTES r21: a 32M cap collapsing sf1's
+    // 28M-edge rep graph driver-side reads 16.1 s vs 11.3 s for the
+    // distributed rounds). Specs pass 0 to pin the distributed rounds.
     val heapBudget = Runtime.getRuntime.maxMemory / 10L / 40L
-    val railCap = math.min(confCap, heapBudget)
+    val railCap = math.min(maxLocalEdges, heapBudget)
     // ROUTE ON THE PAIR COUNT, before anything materializes (r21): the
     // former shape built + cached the symmetric closure FIRST and sized
     // the rail from its count, paying a repartition exchange and a 2×-row
@@ -1872,7 +1842,7 @@ object Dedup {
     * paths cannot drift (their row identity is spec-pinned in
     * NearDupIndexSpec and they share one oracle). `corpusShingles` is
     * (corpus_id, sh_c) from either the inline chain or the index table. */
-  private[graft] def nearDupVerdict(batch: DataFrame, cand: DataFrame,
+  private def nearDupVerdict(batch: DataFrame, cand: DataFrame,
       bsh: DataFrame, corpusShingles: DataFrame, numer: Int,
       denom: Int): DataFrame = {
     // n_corpus_dups counts DISTINCT corpus docs, not verified join rows:

@@ -28,11 +28,11 @@ object Ivf {
     * (d, id) tie-break; asserted in IvfSpec) but with the centroids as
     * ONE plan-referenced object instead of nlist×dim inlined literals,
     * which keeps analysis O(1) and the stage inside WholeStageCodegen
-    * at production nlist. Measured (IvfPlanBench, 100k×128, BENCH_NOTES
-    * r17): at nlist 1,024 the literal plan is 0.83 s analysis + 14.2 s
-    * exec vs the kernel's 0.03 s + 0.94 s; at nlist 4,096 the literal
-    * expression tree OOMs the DRIVER outright while the kernel plans in
-    * 0.04 s and runs 3.7 s. This literal rendering remains the
+    * at production nlist. Measured (100k×128, BENCH_NOTES r17): at
+    * nlist 1,024 the literal plan is 0.83 s analysis + 14.2 s exec vs the
+    * kernel's 0.03 s + 0.94 s; at nlist 4,096 the literal expression tree
+    * OOMs the DRIVER outright while the kernel plans in 0.04 s and runs
+    * 3.7 s. This literal rendering remains the
     * QUERY-side probe ranking
     * ([[knnIvfWith]] needs all nlist scores sorted, not the argmin, and
     * runs it over ≤nQueries rows) and the cross-engine oracle's

@@ -97,6 +97,10 @@ object Stage {
     (leafed(cached), n)
   }
 
+  /** Largest cached entry [[leafed]] hands out as an opaque leaf (64 MiB);
+    * bigger entries keep in-memory-cache consumption. */
+  private val LeafMaxBytes: BigInt = 64L << 20
+
   /** The size-gated opaque-leaf handle over an already-MATERIALIZED
     * cached frame — the shared tail of [[barrier]] and [[seal]]. */
   private def leafed(cached: DataFrame): DataFrame = {
@@ -111,13 +115,10 @@ object Stage {
       // ~+40% on the iterative consumers (each round re-decodes the
       // cache). Entries above the threshold keep classic IMR
       // consumption — their render contribution stays bounded because
-      // their own cached plans are built over (small) leaves. The
-      // threshold is conf-tunable (`graft.stage.leafMaxBytes`); the
-      // default comfortably covers every sf0.1 staged frame and excludes
-      // the big sf ≥ 1 caches.
-      case Some(entry) if bridge.entrySizeBytes(entry) <=
-          BigInt(cached.sparkSession.conf
-            .get("graft.stage.leafMaxBytes", (64L << 20).toString).toLong) =>
+      // their own cached plans are built over (small) leaves.
+      // [[LeafMaxBytes]] comfortably covers every sf0.1 staged frame and
+      // excludes the big sf ≥ 1 caches.
+      case Some(entry) if bridge.entrySizeBytes(entry) <= LeafMaxBytes =>
         val m = registry(cached.sparkSession)
         val base = m.computeIfAbsent(EntryLeaf(entry),
           _ => bridge.opaqueLeafOver(entry, cached.sparkSession))

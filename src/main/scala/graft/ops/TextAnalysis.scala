@@ -909,20 +909,18 @@ object TextAnalysis {
     * Rounds shrink from nMerges to ~nMerges/batchSize (measured in
     * BENCH_NOTES r15).
     *
-    * OPERATING ENVELOPE (BpeEnvelopeBench, sf1, 256 merges —
-    * BENCH_NOTES r17): batchSize 16 is the knee — wall 38.3 s → 9.9 s
-    * (−74%), 0.281 rounds/merge, 22% per-round acceptance, and the
-    * highest merge-table fidelity (99.2% of the serial merge SET;
-    * rank order interleaves immediately by design). Past 64 the
+    * OPERATING ENVELOPE (sf1, 256 merges — BENCH_NOTES r17): batchSize
+    * 16 is the knee — wall 38.3 s → 9.9 s (−74%), 0.281 rounds/merge,
+    * 22% per-round acceptance, and the highest merge-table fidelity
+    * (99.2% of the serial merge SET; rank order interleaves immediately
+    * by design). Past 64 the
     * prefix-disjoint rule caps admissions (batch 64 and 256 both take
     * 58 rounds, acceptance 6.9% → 1.7%, fidelity 96.1%): bigger
     * batches buy almost no rounds and only add drift. Ship 16–64; the
     * wall win saturates there and fidelity is strictly better at the
     * small end. */
   def bpeTrain(docs: DataFrame, nMerges: Int = 8,
-      textCol: String = "text", batchSize: Int = 1,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicLong] = None)
-      : DataFrame = {
+      textCol: String = "text", batchSize: Int = 1): DataFrame = {
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1009,7 +1007,6 @@ object TextAnalysis {
         // materialized (the NEXT round's collect) — defer the release
         releasePrev = releaser(vocab)
         vocab = next
-        roundsOut.foreach(_.incrementAndGet())
       }
     }
     releasePrev()

@@ -16,8 +16,8 @@ import graft.ops.{Dedup, Similarity}
 object DedupSim {
 
   /** documents ∪ near-dup copies: id + 1_000_000, first token dropped.
-    * (private[graft]: tools.SplitShapeBench measures the production
-    * split shape over the same corpus q_split_safe benches.) */
+    * (private[graft]: the benchmark harness in perfbench/harness times
+    * the q_dedup_eval layers over it.) */
   private[graft] def docsWithMutants(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
     docs.union(docs.select(col("doc_id") + 1000000L,
@@ -58,7 +58,7 @@ object DedupSim {
       "blk", n = 1, numer = 9, denom = 10)
 
   def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashSignaturesNative(Tables(s, dir).documents)
+    Dedup.minhashSignatures(Tables(s, dir).documents)
       .select(col("doc_id"), concat_ws(",", col("sig")).as("sig_csv"))
 
   // The near-dup pair relation feeds two queries (the pair listing and
@@ -176,7 +176,7 @@ object DedupSim {
     * over the bucketed scan, aggregated exactly like [[splitSafe]].
     * Identical result to q_split_safe (same oracle); the suite cost is
     * the ~0.6 s map-read + rollup instead of ~11 s of re-clustering
-    * (SplitShapeBench, BENCH_NOTES r14) — q_split_safe stays as the
+    * (BENCH_NOTES r14) — q_split_safe stays as the
     * recompute diagnostic. Rep 1 pays the map write (SessionScoped —
     * rebuilt on release, the bench's documented first-touch pattern). */
   private val splitMapTable = new graft.ops.SessionScoped[String]

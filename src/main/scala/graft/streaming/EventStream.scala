@@ -242,7 +242,7 @@ object EventStream {
     val csh = Dedup.hashedShingleRows(corpus, n, textCol)
       .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
     val cband = Dedup.withBkey(Dedup.bandRows(
-        Dedup.minhashSignaturesNative(corpus, n, k, textCol), bands, k))
+        Dedup.minhashSignatures(corpus, n, k, textCol), bands, k))
       .select(col("doc_id").as("corpus_id"), col("bkey"))
     nearDupScreenWith(docs, cband, csh, n, k, bands, numer, denom, textCol)
   }

@@ -43,41 +43,6 @@ object Bridge {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
-  /** A frame whose LOGICAL plan is the materialized cache entry for `df`
-    * — the plan-size truncation behind [[graft.ops.Stage.barrier]].
-    *
-    * cache() alone truncates nothing: a consumer of a cached frame still
-    * carries the frame's FULL analyzed tree (the CacheManager only swaps
-    * in the InMemoryRelation during that consumer's own planning), so a
-    * pipeline that composes staged stages multiplies upstream trees into
-    * every downstream plan — the r20 audit measured the curation chain's
-    * final plan at ~200k explain lines, with every action paying
-    * single-threaded analysis over it. Re-rooting the staged frame AT the
-    * InMemoryRelation leaf keeps downstream trees proportional to the
-    * visible operators.
-    *
-    * Returns None when `df`'s plan is not in the cache. The leaf frame
-    * scans the same cache entry (same attribute ids, so by-name column
-    * access is unchanged), and repeated barriers over plan-equal inputs
-    * resolve to the SAME relation, preserving cross-rep cache reuse. */
-  def cachedLeaf(df: DataFrame): Option[DataFrame] = {
-    val cs = df.sparkSession.asInstanceOf[
-      org.apache.spark.sql.classic.SparkSession]
-    cs.sharedState.cacheManager.lookupCachedData(
-      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      .map { cd =>
-        // cache lookup matches CANONICALIZED plans, which ignore output
-        // names — the entry may carry the names of a structurally-equal
-        // frame cached earlier. Downstream code addresses columns BY
-        // NAME, so restore the caller's own names with a one-node
-        // Project (caught live: q_lm_score resolved `w1` against an
-        // entry named (token, n_exact)).
-        org.apache.spark.sql.classic.Dataset.ofRows(
-          cs, cd.cachedRepresentation)
-          .toDF(df.queryExecution.analyzed.output.map(_.name): _*)
-      }
-  }
-
   /** The CacheManager entry (InMemoryRelation instance) backing `df`'s
     * plan, as an opaque identity key — None when the plan is not cached.
     * [[graft.ops.Stage]] memoizes one opaque leaf per entry so repeated
@@ -127,11 +92,12 @@ object Bridge {
         imrFrame.queryExecution.toRdd, imrFrame, isStreaming = false))
   }
 
-  /** True when `df` IS a materialized-leaf frame — [[cachedLeaf]] /
-    * [[opaqueLeafOver]] output (optionally under the name-restoring
-    * Project), or any checkpoint-style LogicalRDD. Callers that branch
-    * on "is this input already staged?" must accept these alongside a
-    * conventionally-cached frame (storageLevel != NONE) — a leaf's plan
+  /** True when `df` IS a materialized-leaf frame — an
+    * [[opaqueLeafOver]] output or a frame rooted at an InMemoryRelation
+    * (optionally under a name-restoring Project), or any checkpoint-style
+    * LogicalRDD. Callers that branch on "is this input already staged?"
+    * must accept these alongside a conventionally-cached frame
+    * (storageLevel != NONE) — a leaf's plan
     * no longer matches the CacheManager entry, so `df.storageLevel`
     * reads NONE for it. */
   def isCachedLeaf(df: DataFrame): Boolean = {

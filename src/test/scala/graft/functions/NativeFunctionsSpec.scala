@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -7,12 +8,29 @@ import graft.ops.Dedup
 
 class NativeFunctionsSpec extends SparkSpec {
 
+  /** The declarative reference for [[Dedup.minhashSignatures]]: k
+    * independent `min` aggregates of (aᵢ·h + bᵢ) mod P over the exploded
+    * (doc, shingle) relation, from the same coefficients and modulus. */
+  private def minhashByMinColumns(docs: DataFrame, n: Int = 2,
+      k: Int = 64): DataFrame = {
+    val base = docs.select(col("doc_id"),
+        explode(Dedup.shingles(col("text"), n)).as("shingle"))
+      .withColumn("h", GraftFunctions.polyHash(col("shingle")))
+    val mins = Dedup.minhashCoeffs(k).zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(col("h") * a + b, lit(Dedup.P))).as(s"m$i")
+    }
+    base.groupBy(col("doc_id"))
+      .agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"),
+        array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
   test("native MinHashAgg equals the declarative 64-column form") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val declarative = Dedup.minhashSignatures(docs).collect()
+    val declarative = minhashByMinColumns(docs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val native = Dedup.minhashSignaturesNative(docs).collect()
+    val native = Dedup.minhashSignatures(docs).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native.keySet == declarative.keySet)
     native.foreach { case (id, sig) =>

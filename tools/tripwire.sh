@@ -19,6 +19,10 @@
 # job group), so neither ExecutionContext.Implicits.global nor
 # `new Thread(` may appear outside src/main/scala/graft/ops/Stage.scala.
 #
+# It also refuses a new diagnostic main under src/main/scala: a question
+# about a run is answered from the trace, not by another entry point, so
+# `def main(` may appear only in the entry points listed in $mains below.
+#
 # Usage: tools/tripwire.sh
 set -e
 cd "$(dirname "$0")/.."
@@ -33,6 +37,19 @@ stage=src/main/scala/graft/ops/Stage.scala
 stray=$(grep -rlE 'ExecutionContext\.Implicits\.global|new Thread\(' src/main/scala | grep -vx "$stage" || true)
 if [ -n "$stray" ]; then
   echo "tripwire: a thread or global execution context outside $stage:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+mains="graft/Bench.scala graft/Verify.scala graft/PlanDump.scala
+graft/SkewBench.scala graft/osm/OsmPipeline.scala graft/osm/Cli.scala
+graft/osm/OsmProfile.scala graft/tools/CurationChainBench.scala
+graft/tools/DriverProfDiag.scala graft/tools/FloorDiag.scala
+graft/tools/JobCountDiag.scala graft/tools/ScaleData.scala
+graft/tools/StreamIndexBench.scala"
+allowed=$(for m in $mains; do echo "src/main/scala/$m"; done)
+stray=$(grep -rl 'def main(' src/main/scala | grep -vxF "$allowed" || true)
+if [ -n "$stray" ]; then
+  echo "tripwire: def main( outside the allowed entry points:" >&2
   echo "$stray" >&2
   exit 1
 fi
