@@ -108,7 +108,25 @@ object Tables {
     * `nanosAsLong` only changes how a TIMESTAMP(NANOS) parquet footer
     * SURFACES — as a bigint of nanos, which [[normalizeEventTs]] then
     * converts; without it Spark 4 refuses such footers outright. It is a
-    * no-op for micros-footer data, so setting it unconditionally is safe. */
+    * no-op for micros-footer data, so setting it unconditionally is safe.
+    *
+    * `codegen.cache.maxEntries` sizes Spark's generated-class cache
+    * (default 100) above the engine's working set, so a class generated
+    * by one run is still cached when the next run asks for it instead of
+    * being LRU-evicted and recompiled by Janino. Distinct generated
+    * classes per process, measured on the benchmark's seed-1 inputs
+    * (CodegenMetrics compile counts, 4-core box): curation chain 181,
+    * OSM ETL 85, one cold OSM report round 125. At 100, every warm chain
+    * run recompiled 185–188 classes and the OSM report round compiled
+    * 168 (43 recompiles of its own evictions); at 1000, warm chain runs
+    * compile 0–4. 1000 is > 4× the largest working set: Guava splits
+    * the cap over 4 segments of 250, and an unlucky hash spread must not
+    * fill one early. Metaspace stayed flat (chain peak 163 MB at 1000 vs
+    * 167 MB at 100). Caveat: the cache is STATIC to the JVM —
+    * `CodeGenerator$` builds it once, from the conf of the session
+    * active when codegen first runs — so the value holds only because
+    * every session is built through [[configure]] (tools/tripwire.sh
+    * refuses a session builder outside it under src/main/scala). */
   val SessionConfigs: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // Let AQE re-optimize (and in particular COALESCE) the plan under
@@ -129,7 +147,8 @@ object Tables {
       // design, and the one hot case that relied on partition
       // preservation (components' cached edge relation) re-asserts its
       // layout explicitly.
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** Apply [[SessionConfigs]] to a session builder (chainable). */
   def configure(b: SparkSession.Builder): SparkSession.Builder =

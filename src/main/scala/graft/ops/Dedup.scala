@@ -666,9 +666,18 @@ object Dedup {
       val session = pairs.sparkSession
       val schema = new types.StructType()
         .add("doc_id", "long").add("component", "long")
-      return (session.createDataFrame(
+      val railLabels = session.createDataFrame(
         session.sparkContext.parallelize(out.toSeq,
-          math.max(1, math.min(32, out.size / 4096 + 1))), schema), true)
+          math.max(1, math.min(32, out.size / 4096 + 1))), schema)
+      // A driver-built frame has no size stats, so a consumer's join with
+      // it plans as a sort-merge join that AQE turns into a broadcast
+      // once the labels' shuffle stage reports its size; whether the
+      // other side's shuffle stage stays in the plan then depends on
+      // which stage finishes first, so the plan and its job count would
+      // differ run to run (plans/cluster_map). The node count is known
+      // here: broadcast under the distributed rounds' label bound.
+      return (if (out.size <= maxBroadcastNodes) broadcast(railLabels)
+        else railLabels, true)
     }
     // DISTRIBUTED rounds: the symmetric closure, cached HASH-PARTITIONED
     // BY s — the per-round neighborhood aggregation groups by s, and

@@ -23,6 +23,12 @@
 # about a run is answered from the trace, not by another entry point, so
 # `def main(` may appear only in the entry points listed in $mains below.
 #
+# It also refuses a Spark session built without graft.Tables.configure:
+# the JVM's generated-class cache is sized once, from the first session
+# that generates code, so every `SparkSession.builder()` under
+# src/main/scala must be the argument of `Tables.configure(` — a session
+# built any other way would leave that cache at Spark's default of 100.
+#
 # Usage: tools/tripwire.sh
 set -e
 cd "$(dirname "$0")/.."
@@ -50,6 +56,13 @@ allowed=$(for m in $mains; do echo "src/main/scala/$m"; done)
 stray=$(grep -rl 'def main(' src/main/scala | grep -vxF "$allowed" || true)
 if [ -n "$stray" ]; then
   echo "tripwire: def main( outside the allowed entry points:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+stray=$(grep -rnE 'SparkSession\.builder([^A-Za-z0-9_]|$)' src/main/scala |
+  grep -vF 'Tables.configure(SparkSession.builder())' || true)
+if [ -n "$stray" ]; then
+  echo "tripwire: SparkSession.builder() outside Tables.configure(:" >&2
   echo "$stray" >&2
   exit 1
 fi
