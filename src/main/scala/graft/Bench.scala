@@ -34,16 +34,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/Cli: Tables.events casts TIMESTAMP_NTZ using the
-      // session zone — bench must see the same values the gate verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-bench")
     // JMH-style warmup: initialize the session state, codegen framework,
     // and shuffle machinery on data-free plans so the first measured query
     // isn't charged for one-time JVM setup. Touches NO test data.
@@ -61,7 +52,7 @@ object Bench {
     def calProbe(): Double = {
       val t0 = System.nanoTime()
       // max, not sum: summing 128M arbitrary longs overflows under ANSI
-      spark.range(0, 1L << 27, 1, cpus.toInt)
+      spark.range(0, 1L << 27, 1, spark.sparkContext.defaultParallelism)
         .selectExpr("xxhash64(id) AS h").agg(expr("max(h)")).collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: print formatted physical plans for selected queries.
   * Usage: runMain graft.PlanDump [queryName ...] (default: headline set).
   * Review checklist per the scale design notes: PushedFilters reach the
@@ -12,11 +10,7 @@ object PlanDump {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_join_agg", "q_token_stats", "q_semi_join", "q_sessionize",
         "q_minhash_neardup", "q_knn_brute", "q_filter_in")
-    val spark = Tables.configure(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-plan-dump")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
     names.foreach { n =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew measurement harness (see BENCH_NOTES.md for recorded results):
@@ -70,13 +70,7 @@ object SkewBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-skew-bench")
     if (sys.env.contains("SPARK_GRAFT_SKEW_STAGES"))
       spark.sparkContext.addSparkListener(new StageSpread)
 
@@ -188,14 +182,7 @@ object QueryStages {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-query-stages")
     spark.range(1000).selectExpr("sum(id)").collect() // session warmup
     if (sys.env.contains("SPARK_GRAFT_SKEW_STAGES"))
       spark.sparkContext.addSparkListener(SkewBench.stageSpread())

@@ -62,7 +62,7 @@ object Tables {
   // METADATA memo only (guide §6 — repeated file listing / footer
   // inference is driver-side fixed cost): `spark.read.parquet` re-lists
   // the path and re-reads parquet footers on EVERY call (~60–110 ms per
-  // table on this box, measured by tools.FloorDiag r21), and every query
+  // table on the 32-core box, BENCH_NOTES r21), and every query
   // resolves its tables per invocation — at 176 queries × 2 bench reps
   // that re-resolution was the single largest per-query fixed cost. The
   // memoized value is the resolved LOGICAL PLAN (schema + file index);
@@ -125,8 +125,9 @@ object Tables {
     * 167 MB at 100). Caveat: the cache is STATIC to the JVM —
     * `CodeGenerator$` builds it once, from the conf of the session
     * active when codegen first runs — so the value holds only because
-    * every session is built through [[configure]] (tools/tripwire.sh
-    * refuses a session builder outside it under src/main/scala). */
+    * every `main` builds its session through [[session]], which applies
+    * [[configure]] (tools/tripwire.sh refuses a session builder outside
+    * this file under src/main/scala). */
   val SessionConfigs: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // Let AQE re-optimize (and in particular COALESCE) the plan under
@@ -153,6 +154,25 @@ object Tables {
   /** Apply [[SessionConfigs]] to a session builder (chainable). */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     SessionConfigs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The one session recipe of every `main`: [[configure]] applied,
+    * master `SPARK_MASTER` or else `local[n]`, n shuffle partitions — n
+    * is `SPARK_GRAFT_CPUS` or else the machine's core count — session
+    * zone UTC (the zone [[normalizeEventTs]] reads TIMESTAMP_NTZ in), UI
+    * off, log level WARN. */
+  def session(app: String): SparkSession = {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val s = configure(SparkSession.builder())
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$n]"))
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Normalize `events.ts` to a session-zone (UTC) timestamp with
     * microsecond values, whatever the parquet footer said. Driver testdata

@@ -171,7 +171,7 @@ object StringAlgos {
     * ±1 to their counter lane; the sign of each lane becomes the output
     * bit (> 0 → 1, ties → 0 — the declarative `when(c > 0, 1)` rule).
     *
-    * This is the row-local form of the explode + SimHashAgg pipeline
+    * This is the row-local form of an explode + aggregate pipeline
     * ([[graft.ops.Dedup.simhashes]]): a document's text is ONE row, so
     * nothing about the signature is distributed — the aggregate shape
     * shuffled a 62-lane partial buffer per document (~500 B each;

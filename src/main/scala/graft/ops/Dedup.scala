@@ -889,15 +889,13 @@ object Dedup {
     * Execution shape: ONE codegen'd per-row expression
     * (functions.SimHash62) — a document's text is a single row, so the
     * signature is row-local and needs no explode, no aggregate, and no
-    * shuffle. The previous explode + SimHashAgg pipeline shuffled a
+    * shuffle. The previous explode + aggregate pipeline shuffled a
     * 62-lane partial buffer per document (~500 B each: 319 MB and
     * ~160 CPU-seconds of sort-aggregate machinery at sf1) to merge
-    * buffers that were already complete per input partition.
-    * [[simhashesAgg]] keeps the distributed-accumulation form for
-    * token-stream inputs; [[simhashesDeclarative]] is the 62-sum-column
-    * cross-check (DedupSpec pins three-way equality). One edge differs
-    * by construction: a NULL text yields a (doc_id, NULL) row here,
-    * where the explode-based forms dropped the doc entirely — the
+    * buffers that were already complete per input partition. DedupSpec
+    * pins equality with the declarative 62-sum-column explode form. One
+    * edge differs by construction: a NULL text yields a (doc_id, NULL)
+    * row here, where the explode-based form drops the doc entirely — the
     * row-local shape is the more honest one: the doc stays visible, and
     * the consumers screen it explicitly ([[hammingNearDupPairs]] filters
     * NULL signatures before blocking, counting them through the
@@ -906,36 +904,6 @@ object Dedup {
   def simhashes(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.select(col("doc_id"),
       graft.functions.GraftFunctions.simHash62(col(textCol)).as("simhash"))
-
-  /** The aggregate form of [[simhashes]] — explode to (doc, token) rows,
-    * hash once per row, then ONE native aggregate (functions.SimHashAgg)
-    * folding each hash into a primitive 62-lane counter buffer with
-    * map-side partial aggregation. Identical output; the shape to reach
-    * for when tokens arrive as ROWS (a stream, a pre-exploded relation)
-    * rather than inside one document row. */
-  def simhashesAgg(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(col("doc_id"), explode(split(col(textCol), " ")).as("t"))
-      .withColumn("h", graft.functions.GraftFunctions.polyHash2(col("t")))
-      .groupBy(col("doc_id"))
-      .agg(graft.functions.SimHashAgg
-        .simhash(col("h"), SimHashBits).as("simhash"))
-
-  /** The declarative 62-sum-column form of [[simhashes]] — kept as the
-    * cross-check and for engines without the native aggregate. */
-  def simhashesDeclarative(docs: DataFrame,
-      textCol: String = "text"): DataFrame = {
-    val lanes = (0 until SimHashBits).map { j =>
-      sum(shiftright(col("h"), j).bitwiseAND(1L) * 2L - 1L).as(s"c$j")
-    }
-    docs.select(col("doc_id"), explode(split(col(textCol), " ")).as("t"))
-      .withColumn("h", graft.functions.GraftFunctions.polyHash2(col("t")))
-      .groupBy(col("doc_id"))
-      .agg(lanes.head, lanes.tail: _*)
-      .select(col("doc_id"),
-        (0 until SimHashBits).map(j =>
-          when(col(s"c$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ bitwiseOR _).as("simhash"))
-  }
 
   /** SimHash near-dup candidates with hamming ≤ maxHamming (≤ 6): split
     * the 64-bit hash into 8 byte-chunks and block on all C(8,2)=28 ORDERED

@@ -1,25 +1,11 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry points mirroring the reference's three scripts (SURVEY.md §7
   * module 7). `show(5000, truncate = 35)` matches the audit scripts'
   * pandas display options (max_rows 5000, max_colwidth 35 —
   * audit_bilingual_street_names.py:272-277, audit_phone_numbers.py:
   * 177-179): the K3 console-report sink. */
 private[osm] object Cli {
-  def session(app: String): SparkSession = {
-    val s = graft.Tables.configure(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(app)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** `[osm.xml] [official.xml]` arguments, each defaulting to
     * [[OsmInputs]]. */
   def pathsOrDefault(args: Array[String]): (String, String) = (
@@ -32,7 +18,7 @@ private[osm] object Cli {
 object AuditStreets {
   def main(args: Array[String]): Unit = {
     val (osm, official) = Cli.pathsOrDefault(args)
-    val spark = Cli.session("graft-audit-streets")
+    val spark = graft.Tables.session("graft-audit-streets")
     OsmPipeline(spark, osm, official).streetAudit
       .show(5000, truncate = 35)
     spark.stop()
@@ -44,7 +30,7 @@ object AuditStreets {
 object AuditPhones {
   def main(args: Array[String]): Unit = {
     val (osm, official) = Cli.pathsOrDefault(args)
-    val spark = Cli.session("graft-audit-phones")
+    val spark = graft.Tables.session("graft-audit-phones")
     val p = OsmPipeline(spark, osm, official)
     p.phoneAuditRows.show(5000, truncate = 35)
     Audits.phoneKeyCounts(p.phoneAuditRows).show(5000, truncate = 35)
@@ -59,7 +45,7 @@ object AuditPhones {
 object ExploreCli {
   def main(args: Array[String]): Unit = {
     val (osm, official) = Cli.pathsOrDefault(args)
-    val spark = Cli.session("graft-explore")
+    val spark = graft.Tables.session("graft-explore")
     val p = OsmPipeline(spark, osm, official)
     p.registerViews()
     Explore.summary(spark).show(100, truncate = false)

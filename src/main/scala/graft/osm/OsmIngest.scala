@@ -56,10 +56,13 @@ object OsmIngest {
   // by mis-parsing. At scale, shard the extract into many files (the
   // standard 100 TB shape); for a single big file, repartition after the
   // scan so downstream shaping/cleaning still uses every core.
+  // FAILFAST: the source's default, PERMISSIVE, turns a malformed element
+  // into an all-NULL row and drops the element after it, with no error.
   private def readXml(spark: SparkSession, path: String, rowTag: String,
       schema: StructType): DataFrame =
     spark.read.format("xml")
       .option("rowTag", rowTag)
+      .option("mode", "FAILFAST")
       .schema(schema)
       .load(path)
 

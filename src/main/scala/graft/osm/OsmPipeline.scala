@@ -238,14 +238,7 @@ object ProcessMap {
           "<outDir> [quarantineDir]")
         sys.exit(2)
     }
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-process-map")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-process-map")
     OsmPipeline(spark, osm, officialPath, quarantine).writeCsvs(out)
     spark.stop()
   }

@@ -1,20 +1,12 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: time each OSM pipeline stage in dependency order, so bench
   * attribution (whichever query first touches a shared barrier pays for
   * everything beneath it) can be decomposed into per-stage costs. Run:
   * `sbt "runMain graft.osm.OsmProfile"`. */
 object OsmProfile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-osm-profile")
     spark.range(1000).selectExpr("sum(id)").collect() // session warmup
 
     // optional [osm.xml] [official.xml] args (e.g. a scale_osm.py tile)

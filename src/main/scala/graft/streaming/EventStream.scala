@@ -285,8 +285,8 @@ object EventStream {
     * definition with every other screen, so verdicts cannot drift) and
     * hands the DISTINCT verified (doc_id, corpus_id) match rows plus
     * the batch id to `sink`. Per-trigger index I/O is
-    * candidate-proportional: StreamIndexBench measures it flat across
-    * corpus scales where the transform duals grow.
+    * candidate-proportional: it measured flat across corpus scales
+    * where the transform duals grow (BENCH_NOTES r18–r20).
     *
     * The stamp guard runs per trigger (a swapped/rebuilt index between
     * triggers still fails loudly); `maxLits` is the driver-collect rail

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Self-sampling driver profiler (guide §7.3, in-process): runs a query
   * once warm, then during a second rep samples the rep's thread's stack
   * every ~10 ms from a sampler thread and prints the hottest frames.
@@ -16,14 +14,7 @@ object DriverProfDiag {
     val name = args.headOption.getOrElse("q_curation_chain")
     val topN = args.lift(1).map(_.toInt).getOrElse(40)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-driver-prof-diag")
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).count() // warm: staging + codegen
     graft.ops.Stage.releaseAll(spark)

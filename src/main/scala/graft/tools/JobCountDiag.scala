@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement instrument for the FIXED-OVERHEAD regime (guide §1): at the
   * driver's bench scale (sf0.1 = 5,000 docs) the hot queries are bound by
@@ -17,19 +16,12 @@ import org.apache.spark.sql.SparkSession
   * jobs/stages (guide §1.2 step 1), not faster per-task code.
   *
   * Usage: runMain graft.tools.JobCountDiag q_name [q_name ...]
-  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
   */
 object JobCountDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-job-count-diag")
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for bench runs beyond the driver-provided scale
@@ -51,24 +51,22 @@ object ScaleData {
       rotatedBy(Rot2, (i / Rot.length) % Rot2.length))
 
   def main(args: Array[String]): Unit = {
-    val Array(src, out, factorS) = args
+    val (src, out, factorS) = args match {
+      case Array(a, b, c) => (a, b, c)
+      case _ =>
+        System.err.println("usage: ScaleData <srcDir> <outDir> <factor>")
+        sys.exit(2)
+    }
     val factor = factorS.toInt
     // validate BEFORE any write: an oversized factor must abort up front,
     // not mid-run with a half-written, inconsistent outDir
     require(factor <= 64,
       "per-copy transforms are injective only up to 64 copies " +
         "(65 for text, 64 for the embedding dim rotation)")
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // Tables.configure supplies nanosAsLong: events.ts has shipped as
-      // TIMESTAMP(NANOS) in some generations; the copied column
-      // round-trips bit-identically either way
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Tables.configure supplies nanosAsLong: events.ts has shipped as
+    // TIMESTAMP(NANOS) in some generations; the copied column
+    // round-trips bit-identically either way
+    val spark = graft.Tables.session("graft-scale-data")
 
     def table(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     def write(df: DataFrame, n: String): Unit =

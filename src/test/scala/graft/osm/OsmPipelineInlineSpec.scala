@@ -309,4 +309,31 @@ class OsmPipelineInlineSpec extends SparkSpec {
       "the malformed node must land in quarantine")
     Stage.releaseAll(spark)
   }
+
+  test("without a quarantine dir, a malformed node fails the scan instead " +
+      "of becoming a NULL row") {
+    // node 2's tag is truncated: a permissive scan reads it as an
+    // all-NULL row and loses node 3 with no error
+    val broken =
+      """<?xml version="1.0" encoding="UTF-8"?>
+        |<osm version="0.6">
+        | <node id="1" lat="22.41" lon="114.21" user="c" uid="9"
+        |       version="1" changeset="9"
+        |       timestamp="2017-01-01T00:00:00Z"><tag k="name" v="x"/></node>
+        | <node id="2" lat="22.42" lon="114.22" user="c" uid="9"
+        |       version="1" changeset="9"
+        |       timestamp="2017-01-01T00:00:00Z"><tag k="name" v="y"</node>
+        | <node id="3" lat="22.43" lon="114.23" user="c" uid="9"
+        |       version="1" changeset="9"
+        |       timestamp="2017-01-01T00:00:00Z"><tag k="name" v="z"/></node>
+        |</osm>
+        |""".stripMargin
+    val f = Files.createTempDirectory("graft-osm-broken").resolve("map.osm")
+    Files.write(f, broken.getBytes(StandardCharsets.UTF_8))
+    try {
+      intercept[org.apache.spark.SparkException] {
+        OsmPipeline(spark, f.toString, inputs._2).nodes
+      }
+    } finally Stage.releaseAll(spark)
+  }
 }

@@ -23,11 +23,12 @@
 # about a run is answered from the trace, not by another entry point, so
 # `def main(` may appear only in the entry points listed in $mains below.
 #
-# It also refuses a Spark session built without graft.Tables.configure:
+# It also refuses a Spark session built outside graft.Tables.session:
 # the JVM's generated-class cache is sized once, from the first session
-# that generates code, so every `SparkSession.builder()` under
-# src/main/scala must be the argument of `Tables.configure(` — a session
-# built any other way would leave that cache at Spark's default of 100.
+# that generates code, so `SparkSession.builder` may appear under
+# src/main/scala only in src/main/scala/graft/Tables.scala, whose one
+# recipe applies Tables.configure — a session built any other way would
+# leave that cache at Spark's default of 100.
 #
 # Usage: tools/tripwire.sh
 set -e
@@ -49,9 +50,8 @@ fi
 mains="graft/Bench.scala graft/Verify.scala graft/PlanDump.scala
 graft/SkewBench.scala graft/osm/OsmPipeline.scala graft/osm/Cli.scala
 graft/osm/OsmProfile.scala graft/tools/CurationChainBench.scala
-graft/tools/DriverProfDiag.scala graft/tools/FloorDiag.scala
-graft/tools/JobCountDiag.scala graft/tools/ScaleData.scala
-graft/tools/StreamIndexBench.scala"
+graft/tools/DriverProfDiag.scala graft/tools/JobCountDiag.scala
+graft/tools/ScaleData.scala"
 allowed=$(for m in $mains; do echo "src/main/scala/$m"; done)
 stray=$(grep -rl 'def main(' src/main/scala | grep -vxF "$allowed" || true)
 if [ -n "$stray" ]; then
@@ -59,10 +59,11 @@ if [ -n "$stray" ]; then
   echo "$stray" >&2
   exit 1
 fi
-stray=$(grep -rnE 'SparkSession\.builder([^A-Za-z0-9_]|$)' src/main/scala |
-  grep -vF 'Tables.configure(SparkSession.builder())' || true)
+tables=src/main/scala/graft/Tables.scala
+stray=$(grep -rlE 'SparkSession\.builder([^A-Za-z0-9_]|$)' src/main/scala |
+  grep -vx "$tables" || true)
 if [ -n "$stray" ]; then
-  echo "tripwire: SparkSession.builder() outside Tables.configure(:" >&2
+  echo "tripwire: SparkSession.builder outside $tables:" >&2
   echo "$stray" >&2
   exit 1
 fi
