@@ -427,7 +427,7 @@ object Dedup {
     * native aggregate (fixed seed 7 — the family the DuckDB oracles
     * render as literals). Shared by the same two pipelines as
     * [[hashedShingleRows]]. */
-  private def minhashSigsOf(sh: DataFrame, k: Int): DataFrame =
+  private[graft] def minhashSigsOf(sh: DataFrame, k: Int): DataFrame =
     sh.select(col("doc_id"), explode(col("sh")).as("h"))
       .groupBy(col("doc_id"))
       .agg(graft.functions.MinHashAgg.minhash(col("h"), k, seed = 7L)
@@ -1809,19 +1809,18 @@ object Dedup {
       .join(bandRows(minhashSigsOf(csh, k), bands, k)
         .withColumnRenamed("doc_id", "corpus_id"), Seq("band", "key"))
       .select(col("doc_id"), col("corpus_id")).distinct()
-    nearDupVerdict(batch, cand, bsh,
+    nearDupVerdict(batch, verifiedCorpusPairs(cand, bsh,
       csh.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
-      numer, denom)
+      numer, denom))
   }
 
   /** The shared verification + verdict assembly of the two incremental
     * near-dup screens — ONE definition so the inline and persisted-index
     * paths cannot drift (their row identity is spec-pinned in
-    * NearDupIndexSpec and they share one oracle). `corpusShingles` is
-    * (corpus_id, sh_c) from either the inline chain or the index table. */
-  private def nearDupVerdict(batch: DataFrame, cand: DataFrame,
-      bsh: DataFrame, corpusShingles: DataFrame, numer: Int,
-      denom: Int): DataFrame = {
+    * NearDupIndexSpec and they share one oracle). `verified` is
+    * [[verifiedCorpusPairs]] over the inline chain or the index. */
+  private def nearDupVerdict(batch: DataFrame,
+      verified: DataFrame): DataFrame = {
     // n_corpus_dups counts DISTINCT corpus docs, not verified join rows:
     // with a deduped candidate set and one shingle row per corpus doc
     // the two are identical, but a RETRIED index append leaves duplicate
@@ -1829,12 +1828,10 @@ object Dedup {
     // charge the same corpus doc once per copy — countDistinct makes
     // blind append retries verdict-idempotent with no transactional
     // format underneath (VERDICT r17 #1)
-    val verified = verifiedCorpusPairs(cand, bsh, corpusShingles,
-        numer, denom)
-      .groupBy(col("doc_id"))
+    val dups = verified.groupBy(col("doc_id"))
       .agg(countDistinct(col("corpus_id")).cast("long").as("n_corpus_dups"))
     batch.select(col("doc_id"))
-      .join(verified, Seq("doc_id"), "left")
+      .join(dups, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_corpus_dups"), lit(0L)).as("n_corpus_dups"),
         (coalesce(col("n_corpus_dups"), lit(0L)) === 0L).as("kept"))
@@ -1871,9 +1868,9 @@ object Dedup {
     *    fused [[withBkey]] key: the candidate join's exact clustering
     *    (only the batch's band rows shuffle — the 100 TB corpus side
     *    never moves), and single-column bucketing is what lets Spark's
-    *    native bucket pruning fire on a key-filtered probe
-    *    ([[incrementalNearDedupPruned]]) so a micro-batch screen reads only
-    *    its candidate buckets' files.
+    *    native bucket pruning fire on a key-filtered probe (the small-
+    *    probe route of [[incrementalNearDedupFrom]]) so a micro-batch
+    *    screen reads only its candidate buckets' files.
     *  - `shingleTable` (doc_id, sh), bucketed by doc_id: the
     *    verification probe's corpus side, read in place per candidate.
     *
@@ -2116,157 +2113,106 @@ object Dedup {
   /** [[incrementalNearDedup]] against the PERSISTED index tables of
     * [[buildNearDupIndex]] — row-identical output ((doc_id,
     * n_corpus_dups, kept) per batch doc; same banding, same integer
-    * Jaccard), but the corpus-side work is two in-place bucketed scans:
-    * the band probe moves only batch band rows, and the verification
-    * joins the (small) candidate set against the shingle table on its
-    * bucket key. The corpus is touched ZERO times per increment beyond
-    * those scans — the shape that holds when the corpus is 100 TB and
-    * the nightly batch is 100 GB. */
+    * Jaccard), but the corpus side is two bucketed scans, routed on the
+    * batch's counted size ([[indexSides]]): a large batch probes both
+    * tables in place, a small one reads only its candidate buckets. The
+    * corpus is touched ZERO times per increment beyond those scans —
+    * the shape that holds when the corpus is 100 TB and the nightly
+    * batch is 100 GB. */
   def incrementalNearDedupFrom(s: SparkSession, batch: DataFrame,
       bandTable: String, shingleTable: String, n: Int = 2, k: Int = 64,
       bands: Int = 16, numer: Int = 7, denom: Int = 10,
-      textCol: String = "text"): DataFrame = {
-    requireIndexParams(s, bandTable, shingleTable, n, k, bands)
-    val bsh = Stage.barrier(hashedShingleRows(batch, n, textCol))
-    val cand = nearDupBandProbe(s,
-        withBkey(bandRows(minhashSigsOf(bsh, k), bands, k)), bandTable)
-      .select(col("doc_id"), col("corpus_id")).distinct()
-    nearDupVerdict(batch, cand, bsh,
-      s.table(shingleTable)
-        .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
-      numer, denom)
-  }
+      textCol: String = "text", maxLits: Int = 2048): DataFrame =
+    nearDupVerdict(batch, indexPairs(s, batch, bandTable, shingleTable,
+      n, k, bands, numer, denom, textCol, maxLits))
 
-  /** PRUNED index sides for a SMALL probe batch (a streaming
-    * micro-batch, a trickle increment): the batch's band rows — at most
-    * |batch|·bands — are collected to the driver ONCE and become (a)
-    * the candidate bucket set, resolved to FILES driver-side with the
-    * write's own hash ([[graft.sources.PartitionedStore.bucketIdOf]] /
-    * prunedBucketScan — r19, replacing the r18 genBucketSet path whose
-    * interpreted per-value planning walk was the screen's dominant
-    * ~2 s constant), and (b) a broadcast LOCAL probe relation, so the
-    * candidate join reads only candidate-bucket files and shuffles
-    * NOTHING. The verified candidates are collected in the same way
-    * (one action, both the cand relation and the shingle-side id
-    * filter), so a trickle trigger runs FOUR jobs total: batch-shingle
-    * barrier, band-row collect, candidate collect, verdict. The file
-    * filters are purely an I/O bound (every join re-applies its key
-    * equality, and the InSet filters survive as parquet pushdown), so
-    * the rows are identical to the unpruned screen by construction
-    * (NearDupIndexSpec pins equality; PartitionedStoreSpec pins the
-    * driver hash against the written files).
-    *
-    * Rails, all bounded by `maxLits` (default 2048 ≈ a 128-doc trigger
-    * at bands = 16): band rows > 2·maxLits or distinct keys > maxLits →
-    * the full in-place bucketed plan of [[incrementalNearDedupFrom]]
-    * (a jumbo trigger is corpus-shaped work — the in-place scan IS the
-    * right plan, like the LSH bucket rail); verified candidates >
-    * 4·maxLits → the candidate relation stays distributed and only the
-    * shingle side falls back. The rails bound every driver collect and
-    * every InSet's execution size; planning is O(1) in the key count
-    * either way. */
-  private def prunedIndexSides(s: SparkSession, bsh: DataFrame,
-      bandTable: String, shingleTable: String, k: Int, bands: Int,
-      maxLits: Int): (DataFrame, DataFrame) = {
-    import graft.sources.PartitionedStore
-    val bbandsDf = withBkey(bandRows(minhashSigsOf(bsh, k), bands, k))
-      .select(col("doc_id"), col("bkey"))
-    def shingleSideOf(cids: Seq[Any]): DataFrame = {
-      // the key filter lives inside prunedBucketScan (applied only
-      // when files were actually pruned — an unpruned catalog read
-      // must carry NO key filter or genBucketSet's planning walk
-      // returns); the verification join re-applies the equality
-      val base =
-        if (cids.size > maxLits) s.table(shingleTable)
-        else PartitionedStore.prunedBucketScan(s, shingleTable, cids)
-      base.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
-    }
-    def distributedCand(bandProbe: DataFrame, bandSide: DataFrame)
-        : (DataFrame, DataFrame) = {
-      val cand = Stage.barrier(
-        bandProbe.join(bandSide.select(col("bkey"),
-            col("doc_id").as("corpus_id")), Seq("bkey"))
-          .select(col("doc_id"), col("corpus_id")).distinct())
-      val cids = cand.select(col("corpus_id")).distinct()
-        .limit(maxLits + 1).collect().map(_.get(0)).toSeq
-      (cand, shingleSideOf(cids))
-    }
-    val rowCap = maxLits * 2
-    val head = bbandsDf.limit(rowCap + 1).collect()
-    val keys = head.iterator.map(_.getString(1)).toSet
-    if (head.length > rowCap || keys.size > maxLits)
-      // jumbo trigger: corpus-shaped work — take the in-place plan.
-      // (A small probe whose keys happen to touch EVERY bucket still
-      // takes the broadcast collect-probe: prunedBucketScan degrades
-      // it to the unfiltered catalog read, and the broadcast-hash
-      // probe over that scan measured FASTER than the in-place
-      // sort-merge join — BENCH_NOTES r19 A/B — so the rail, not
-      // prunability, decides the route.)
-      distributedCand(Stage.barrier(bbandsDf), s.table(bandTable))
-    else {
-      val localBands = broadcast(s.createDataFrame(
-        java.util.Arrays.asList(head: _*), bbandsDf.schema))
-      val bandSide = PartitionedStore
-        .prunedBucketScan(s, bandTable, keys)
-      val candDf = bandSide.select(col("bkey"),
-          col("doc_id").as("corpus_id"))
-        .join(localBands, Seq("bkey"))
-        .select(col("doc_id"), col("corpus_id")).distinct()
-      val candCap = maxLits * 4
-      val candRows = candDf.limit(candCap + 1).collect()
-      // overflow probe rebuilt from bbandsDf, NOT localBands: barriers
-      // track under their frame's session, and in a foreachBatch
-      // trigger bbandsDf carries the batch's (cloned) session — the
-      // one Stage.scoped releases — while localBands was created on
-      // the caller's session; a cand barrier left of localBands would
-      // escape the trigger scope and pin a cache per overflow trigger
-      // forever (round-close review r19). bbandsDf re-derives from the
-      // cached bsh, so the rebuild is one cheap projection.
-      if (candRows.length > candCap)
-        distributedCand(Stage.barrier(bbandsDf), bandSide)
-      else {
-        val cand = broadcast(s.createDataFrame(
-          java.util.Arrays.asList(candRows: _*), candDf.schema))
-        val cids = candRows.iterator.map(_.get(1)).toSeq.distinct
-        (cand, shingleSideOf(cids))
-      }
-    }
-  }
-
-  /** [[incrementalNearDedupFrom]] with BOTH index scans pruned to the
-    * batch's candidate buckets ([[prunedIndexSides]]) — identical
-    * verdict rows (NearDupIndexSpec pins equality; the bucket files are
-    * selected driver-side with the write's own hash), candidate-
-    * proportional I/O, O(1) planning in the key count. Use for small
-    * probes; above `maxLits` distinct keys it degrades to the full
-    * in-place scan, which is then the right plan. */
-  def incrementalNearDedupPruned(s: SparkSession, batch: DataFrame,
-      bandTable: String, shingleTable: String, n: Int = 2, k: Int = 64,
-      bands: Int = 16, numer: Int = 7, denom: Int = 10,
-      textCol: String = "text", maxLits: Int = 2048): DataFrame = {
-    requireIndexParams(s, bandTable, shingleTable, n, k, bands)
-    val bsh = Stage.barrier(hashedShingleRows(batch, n, textCol))
-    val (cand, csh) = prunedIndexSides(s, bsh, bandTable, shingleTable,
-      k, bands, maxLits)
-    nearDupVerdict(batch, cand, bsh, csh, numer, denom)
-  }
-
-  /** Pair-shaped pruned screen — DISTINCT verified (doc_id, corpus_id)
-    * match rows over the pruned index sides; what the streaming
+  /** Pair-shaped index screen — DISTINCT verified (doc_id, corpus_id)
+    * match rows over the same routed index sides; what the streaming
     * foreachBatch dual ([[graft.streaming.EventStream.nearDupIndexEachBatch]])
     * hands its sink each trigger, sharing the verification definition
     * with every other screen so they cannot drift. */
-  private[graft] def nearDupMatchesPruned(s: SparkSession,
+  private[graft] def nearDupMatches(s: SparkSession,
       batch: DataFrame, bandTable: String, shingleTable: String,
       n: Int = 2, k: Int = 64, bands: Int = 16, numer: Int = 7,
       denom: Int = 10, textCol: String = "text",
-      maxLits: Int = 2048): DataFrame = {
+      maxLits: Int = 2048): DataFrame =
+    indexPairs(s, batch, bandTable, shingleTable, n, k, bands, numer,
+      denom, textCol, maxLits).dropDuplicates("doc_id", "corpus_id")
+
+  /** The verified pairs both index screens consume: stamp check, the
+    * staged batch shingles (whose materializing count sizes the route),
+    * the routed index sides, the shared verification. */
+  private def indexPairs(s: SparkSession, batch: DataFrame,
+      bandTable: String, shingleTable: String, n: Int, k: Int, bands: Int,
+      numer: Int, denom: Int, textCol: String, maxLits: Int): DataFrame = {
     requireIndexParams(s, bandTable, shingleTable, n, k, bands)
-    val bsh = Stage.barrier(hashedShingleRows(batch, n, textCol))
-    val (cand, csh) = prunedIndexSides(s, bsh, bandTable, shingleTable,
+    val (bsh, nDocs) =
+      Stage.barrierCounted(hashedShingleRows(batch, n, textCol))
+    val (cand, csh) = indexSides(s, bsh, nDocs, bandTable, shingleTable,
       k, bands, maxLits)
     verifiedCorpusPairs(cand, bsh, csh, numer, denom)
-      .dropDuplicates("doc_id", "corpus_id")
+  }
+
+  /** (candidates, corpus shingles) of the staged batch shingles `bsh`
+    * (`nDocs` rows), on one of three routes:
+    *  - IN PLACE ([[nearDupBandProbe]], whole shingle table): when the
+    *    batch may carry more than 2·`maxLits` band rows (nDocs·bands;
+    *    nothing is collected — a large batch is corpus-shaped work),
+    *    when its collected band rows hold more than `maxLits` distinct
+    *    keys, and always at `maxLits = 0`.
+    *  - PRUNED (REPOSE's prune-before-verify, ICDE 2021): the band rows
+    *    are collected once and become the candidate bucket set, read as
+    *    FILES chosen with the write's own hash
+    *    ([[graft.sources.PartitionedStore.prunedBucketScan]]), and a
+    *    broadcast probe; the candidates (≤ 4·`maxLits`) are collected,
+    *    broadcast, and their corpus ids (≤ `maxLits`) prune the shingle
+    *    side. A probe whose keys touch every bucket still takes this
+    *    route: the broadcast probe over the unfiltered catalog read
+    *    measured faster than the sort-merge join (BENCH_NOTES r19).
+    *  - OVERFLOW (> 4·`maxLits` candidates): the candidates stay lazy
+    *    over the pruned band side and the shingle table is read in
+    *    place. Nothing is staged, so nothing outlives a trigger scope.
+    * File filters only bound I/O (every join re-applies its key
+    * equality), so all routes return the same rows — NearDupIndexSpec
+    * pins each against the in-place route. */
+  private def indexSides(s: SparkSession, bsh: DataFrame, nDocs: Long,
+      bandTable: String, shingleTable: String, k: Int, bands: Int,
+      maxLits: Int): (DataFrame, DataFrame) = {
+    import graft.sources.PartitionedStore
+    def shingleSide(base: DataFrame): DataFrame =
+      base.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
+    val bbands = withBkey(bandRows(minhashSigsOf(bsh, k), bands, k))
+    def inPlace: (DataFrame, DataFrame) =
+      (nearDupBandProbe(s, bbands, bandTable)
+        .select(col("doc_id"), col("corpus_id")).distinct(),
+        shingleSide(s.table(shingleTable)))
+    if (maxLits <= 0 || nDocs * bands > 2L * maxLits) return inPlace
+    val probeDf = bbands.select(col("doc_id"), col("bkey"))
+    val head = probeDf.collect()
+    val keys = head.iterator.map(_.getString(1)).toSet
+    if (keys.size > maxLits) return inPlace
+    val localBands = broadcast(s.createDataFrame(
+      java.util.Arrays.asList(head: _*), probeDf.schema))
+    val candDf = PartitionedStore.prunedBucketScan(s, bandTable, keys)
+      .select(col("bkey"), col("doc_id").as("corpus_id"))
+      .join(localBands, Seq("bkey"))
+      .select(col("doc_id"), col("corpus_id")).distinct()
+    val candCap = maxLits * 4
+    val candRows = candDf.limit(candCap + 1).collect()
+    if (candRows.length > candCap)
+      (candDf, shingleSide(s.table(shingleTable)))
+    else {
+      val cids = candRows.iterator.map(_.get(1)).toSeq.distinct
+      // the key filter lives inside prunedBucketScan (applied only when
+      // files were actually pruned — an unpruned catalog read must carry
+      // NO key filter or genBucketSet's planning walk returns); the
+      // verification join re-applies the equality
+      (broadcast(s.createDataFrame(
+          java.util.Arrays.asList(candRows: _*), candDf.schema)),
+        shingleSide(
+          if (cids.size > maxLits) s.table(shingleTable)
+          else PartitionedStore.prunedBucketScan(s, shingleTable, cids)))
+    }
   }
 
   /** Corpus snapshot diff — the audit between two versions of an

@@ -11,12 +11,19 @@ private[osm] object Cli {
   def pathsOrDefault(args: Array[String]): (String, String) = (
     args.lift(0).getOrElse(OsmInputs.osm),
     args.lift(1).getOrElse(OsmInputs.official))
+
+  /** Runs a CLI's `main` body with `Console.out`, where `Dataset.show`
+    * prints, as a UTF-8 stream: the JVM's stdout encodes with the default
+    * charset, which is ASCII when `LANG` is unset, and would print every
+    * Chinese street name as `?`. */
+  def utf8Out(body: => Unit): Unit = Console.withOut(new java.io.PrintStream(
+    System.out, true, java.nio.charset.StandardCharsets.UTF_8))(body)
 }
 
 /** `AuditStreets [osm.xml] [official.xml]` — the bilingual street-name
   * audit table (audit_bilingual_street_names.py equivalent). */
 object AuditStreets {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Cli.utf8Out {
     val (osm, official) = Cli.pathsOrDefault(args)
     val spark = graft.Tables.session("graft-audit-streets")
     OsmPipeline(spark, osm, official).streetAudit
@@ -28,7 +35,7 @@ object AuditStreets {
 /** `AuditPhones [osm.xml]` — the phone-number audit: full table, key
   * histogram, character census (audit_phone_numbers.py equivalent). */
 object AuditPhones {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Cli.utf8Out {
     val (osm, official) = Cli.pathsOrDefault(args)
     val spark = graft.Tables.session("graft-audit-phones")
     val p = OsmPipeline(spark, osm, official)
@@ -43,7 +50,7 @@ object AuditPhones {
   * every scalar metric plus the users-vs-contributions table
   * (case_study_osm.pdf p.8-12 equivalent). */
 object ExploreCli {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Cli.utf8Out {
     val (osm, official) = Cli.pathsOrDefault(args)
     val spark = graft.Tables.session("graft-explore")
     val p = OsmPipeline(spark, osm, official)

@@ -258,7 +258,7 @@ object CorpusOps {
   def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val path = jsonlCache.getOrCompute(s, dir) {
       // sanitized dir + hash, collision-free for distinct dirs (see
-      // DedupSim.landingPipeline's landing path)
+      // DedupSim's landing path)
       val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
         f"-${dir.hashCode & 0xffffffffL}%08x"
       val p = s"/tmp/graft_jsonl/$tag"

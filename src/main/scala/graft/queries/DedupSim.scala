@@ -369,19 +369,14 @@ object DedupSim {
           regexp_replace(col("text"), "^[^ ]* ", ""))
         .otherwise(translate(col("text"), "sr", "59")).as("text"))
 
-  // the landing JSONL and its published output are written once per
-  // (session, dir) — reps re-read the landed files, as a real landing
-  // zone would, instead of re-writing them
-  private val landingCache = new graft.ops.SessionScoped[String]
-  private val publishCache = new graft.ops.SessionScoped[String]
-
   /** The landing-zone chain END-TO-END, every stage the library's own
     * operator: JSONL landing scan ([[graft.sources.JsonlStore]]) →
     * Gopher quality screen → exact digest dedup (within-batch first
     * occurrence + corpus anti-join) → MinHash-LSH near-dup screen against
     * the corpus → write–audit–publish of the survivors
     * ([[graft.sources.Publish]], staged write, row-count audit, atomic
-    * rename). Returns one row per LANDED doc with its terminal status —
+    * rename). This is epoch 1 of [[epochRefresh]], projected to
+    * (doc_id, status): one row per LANDED doc with its terminal status —
     * screened / dup_exact / dup_near / published — the audit relation a
     * landing zone keeps; the published set is read back from the
     * PUBLISHED STORE, not the in-memory frame, so the query verifies
@@ -394,62 +389,13 @@ object DedupSim {
     * Scale shape: each stage keeps its own audited plan (per-row gate;
     * digest-keyed shuffles; banded candidates, never all-pairs); the
     * status assembly is three left joins on bare 8-byte ids. */
-  def landingPipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val path = landingCache.getOrCompute(s, dir) {
-      // sanitized dir + hash: two DISTINCT sf dirs can never share a
-      // landing path (a bare hashCode could collide and silently serve
-      // one dir's published store to the other)
-      val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-        f"-${dir.hashCode & 0xffffffffL}%08x"
-      val p = s"/tmp/graft_landing/$tag"
-      graft.sources.JsonlStore.writeJsonl(landingBatch(docs), p)
-      p
-    }
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("text", "string")
-    val landed = graft.ops.Stage.barrier(
-      graft.sources.JsonlStore.readJsonl(s, path, schema))
-    val passed = graft.ops.TextAnalysis.gopherRules(landed)
-      .filter(col("gopher_pass")).select(col("doc_id"))
-    val screened = graft.ops.Stage.barrier(
-      landed.join(passed, Seq("doc_id"), "left_semi"))
-    val seen = docs.select(sha2(lower(col("text")), 256).as("digest"))
-    val exactKept = graft.ops.Stage.barrier(
-      Dedup.incrementalDedup(screened, seen).select(col("doc_id")))
-    val survivors = graft.ops.Stage.barrier(
-      screened.join(exactKept, Seq("doc_id"), "left_semi"))
-    val near = Dedup.incrementalNearDedup(survivors, docs)
-    val pubPath = publishCache.getOrCompute(s, dir) {
-      val p = s"$path.published"
-      // staged: the near-dup screen (the chain's most expensive stage)
-      // would otherwise run twice — once for the audit expectation and
-      // once inside Publish's write
-      val (toPublish, expected) = graft.ops.Stage.barrierCounted(
-        survivors.join(
-          near.filter(col("kept")).select(col("doc_id")),
-          Seq("doc_id"), "left_semi"))
-      graft.sources.Publish.parquet(toPublish, p,
-        rowAudit = _ == expected)
-      p
-    }
-    val published = graft.sources.Publish.readPublished(s, pubPath)
-      .select(col("doc_id"))
-    landed.select(col("doc_id"))
-      .join(passed.withColumn("_s", lit(true)), Seq("doc_id"), "left")
-      .join(exactKept.withColumn("_e", lit(true)), Seq("doc_id"), "left")
-      .join(published.withColumn("_p", lit(true)), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("_s").isNull, lit("screened"))
-          .when(col("_e").isNull, lit("dup_exact"))
-          .when(col("_p").isNull, lit("dup_near"))
-          .otherwise(lit("published")).as("status"))
-  }
+  def landingPipeline(s: SparkSession, dir: String): DataFrame =
+    epoch1Status(s, dir).select(col("doc_id"), col("status"))
 
-  // epoch-refresh artifacts: two landings + two published stores, all
-  // written once per (session, dir) like the landing-zone caches above
-  private val epochCache =
-    new graft.ops.SessionScoped[(String, String, String, String)]
+  // each epoch's landing and published store, written once per (session,
+  // dir): reps re-read the landed files, as a real landing zone would
+  private val epoch1Cache = new graft.ops.SessionScoped[(String, String)]
+  private val epoch2Cache = new graft.ops.SessionScoped[(String, String)]
 
   /** The INCREMENTAL EPOCH CHAIN end-to-end (VERDICT r15 #7): epoch 1
     * lands the recrawl batch (JSONL), screens (gopher), exact-dedups and
@@ -527,33 +473,47 @@ object DedupSim {
       rowAudit = _ == expected)
   }
 
-  /** Lands + publishes both epochs once per (session, dir); returns
-    * (land1, pub1, land2, pub2) paths. Shared by [[epochRefresh]] and
-    * the production-shape [[epochRefreshProd]]. */
-  private def epochArtifacts(s: SparkSession, dir: String)
-      : (String, String, String, String) = {
-    import graft.ops.Stage
+  /** Lands + publishes epoch 1 once per (session, dir); returns
+    * (land1, pub1) paths — the landing zone's, shared by
+    * [[landingPipeline]] and every epoch chain built on it. */
+  private def epoch1Artifacts(s: SparkSession, dir: String)
+      : (String, String) = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    epochCache.getOrCompute(s, dir) {
-      val tag = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
+    epoch1Cache.getOrCompute(s, dir) {
+      // sanitized dir + hash: two DISTINCT sf dirs can never share a
+      // landing path (a bare hashCode could collide and silently serve
+      // one dir's published store to the other)
+      val land1 = "/tmp/graft_landing/" +
+        dir.replaceAll("[^A-Za-z0-9._-]", "_") +
         f"-${dir.hashCode & 0xffffffffL}%08x"
-      val base = s"/tmp/graft_epochs/$tag"
-      val land1 = s"$base/land1"
       graft.sources.JsonlStore.writeJsonl(landingBatch(docs), land1)
-      val pub1Path = s"$base/pub1"
-      epochPublish(Stage.barrier(
+      val pub1Path = s"$land1.published"
+      epochPublish(graft.ops.Stage.barrier(
         graft.sources.JsonlStore.readJsonl(s, land1, epochSchema)),
         docs, pub1Path)
+      (land1, pub1Path)
+    }
+  }
+
+  /** [[epoch1Artifacts]] plus epoch 2 landed + published on top of them
+    * once per (session, dir): (land1, pub1, land2, pub2) paths. */
+  private def epochArtifacts(s: SparkSession, dir: String)
+      : (String, String, String, String) = {
+    val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
+    val (land1, pub1Path) = epoch1Artifacts(s, dir)
+    val (land2, pub2Path) = epoch2Cache.getOrCompute(s, dir) {
+      val base = graft.sources.PartitionedStore.storePath("epochs", dir)
       val pub1 = graft.sources.Publish.readPublished(s, pub1Path)
         .select(col("doc_id"), col("text"))
       val land2 = s"$base/land2"
       graft.sources.JsonlStore.writeJsonl(epoch2BatchOf(pub1), land2)
       val pub2Path = s"$base/pub2"
-      epochPublish(Stage.barrier(
+      epochPublish(graft.ops.Stage.barrier(
         graft.sources.JsonlStore.readJsonl(s, land2, epochSchema)),
         docs.unionByName(pub1), pub2Path)
-      (land1, pub1Path, land2, pub2Path)
+      (land2, pub2Path)
     }
+    (land1, pub1Path, land2, pub2Path)
   }
 
   /** One epoch's per-landed-doc verdict frame — the ONE status cascade
@@ -591,17 +551,21 @@ object DedupSim {
         when(col("_p").isNotNull, col("split")).as("split"))
   }
 
+  /** Epoch 1's status cascade against the base corpus. */
+  private def epoch1Status(s: SparkSession, dir: String): DataFrame = {
+    val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
+    val (l1, p1) = epoch1Artifacts(s, dir)
+    epochStatusOf(s, 1, l1, docs, graft.sources.Publish.readPublished(s, p1))
+  }
+
   def epochRefresh(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (l1, p1, l2, p2) = epochArtifacts(s, dir)
-    def pubOf(pubPath: String): DataFrame =
-      graft.sources.Publish.readPublished(s, pubPath)
-        .select(col("doc_id"), col("split"))
+    val (_, p1, l2, p2) = epochArtifacts(s, dir)
     val pub1 = graft.sources.Publish.readPublished(s, p1)
       .select(col("doc_id"), col("text"))
-    epochStatusOf(s, 1, l1, docs, pubOf(p1))
-      .unionByName(
-        epochStatusOf(s, 2, l2, docs.unionByName(pub1), pubOf(p2)))
+    epoch1Status(s, dir)
+      .unionByName(epochStatusOf(s, 2, l2, docs.unionByName(pub1),
+        graft.sources.Publish.readPublished(s, p2)))
   }
 
   // the refreshed-corpus digest store, published once per (session, dir)
@@ -620,7 +584,7 @@ object DedupSim {
   private[graft] def epochDigestStore(s: SparkSession, dir: String)
       : String = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (_, p1, _, _) = epochArtifacts(s, dir)
+    val (_, p1) = epoch1Artifacts(s, dir)
     epochDigestTable.getOrCompute(s, dir) {
       val (t, path) =
         graft.sources.PartitionedStore.storeNames("epochdig", dir)
@@ -632,20 +596,6 @@ object DedupSim {
         t, path, "digest", 32, Seq("digest"))
       t
     }
-  }
-
-  /** The screen join itself, over an arbitrary screened (doc_id, text)
-    * batch: within-batch first occurrence per digest (the shared
-    * [[graft.ops.Dedup.firstPerDigest]] keep rule — NULL digests kept
-    * untouched, exactly as the recompute path), then the in-place anti
-    * join — the batch's exchanges both hash on the digest and the
-    * corpus side never moves. EpochProdSpec pins exactly this plan. */
-  private[graft] def epochExactScreenFrom(s: SparkSession,
-      screened: DataFrame, digestTable: String): DataFrame = {
-    val firstKeep = Dedup.firstPerDigest(screened
-      .select(col("doc_id"), sha2(lower(col("text")), 256).as("_dig")))
-    graft.sources.PartitionedStore.antiJoinBucketed(s, firstKeep,
-      digestTable).select(col("doc_id"))
   }
 
   /** Epoch 2's exact screen against the bucketed digest store as a
@@ -664,7 +614,8 @@ object DedupSim {
       .filter(col("gopher_pass")).select(col("doc_id"))
     val screened = graft.ops.Stage.barrier(
       landed.join(passed, Seq("doc_id"), "left_semi"))
-    val kept = epochExactScreenFrom(s, screened, tbl)
+    val kept = Dedup.incrementalDedupFrom(s, screened, tbl)
+      .select(col("doc_id"))
     screened.select(col("doc_id"))
       .join(kept.withColumn("_k", lit(true)), Seq("doc_id"), "left")
       .select(col("doc_id"), col("_k").isNotNull.as("kept_exact"))

@@ -234,15 +234,16 @@ object EventStream {
   def nearDupAgainstCorpus(docs: DataFrame, corpus: DataFrame,
       n: Int = 2, k: Int = 64, bands: Int = 16, numer: Int = 7,
       denom: Int = 10, textCol: String = "text"): DataFrame = {
-    import graft.ops.Dedup
+    import graft.ops.{Dedup, Stage}
     // static index: shingles for verification, native-agg signatures,
-    // band rows — built once per (micro-batch-epoch) plan; the hashed
-    // shingle relation is Dedup's own recipe on BOTH sides, so the
-    // stream and batch hash families cannot drift
-    val csh = Dedup.hashedShingleRows(corpus, n, textCol)
-      .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
+    // band rows — the hashed shingle relation is Dedup's own recipe on
+    // BOTH sides, so the stream and batch hash families cannot drift,
+    // and it is staged once to feed both the signatures and the
+    // verification side (Dedup.minhashDedupPairs' shape)
+    val sh = Stage.barrier(Dedup.hashedShingleRows(corpus, n, textCol))
+    val csh = sh.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
     val cband = Dedup.withBkey(Dedup.bandRows(
-        Dedup.minhashSignatures(corpus, n, k, textCol), bands, k))
+        Dedup.minhashSigsOf(sh, k), bands, k))
       .select(col("doc_id").as("corpus_id"), col("bkey"))
     nearDupScreenWith(docs, cband, csh, n, k, bands, numer, denom, textCol)
   }
@@ -280,8 +281,8 @@ object EventStream {
     * non-candidate files can only exist once the micro-batch is
     * CONCRETE, which in Structured Streaming means `foreachBatch` — so
     * this dual is sink-shaped, not transform-shaped. Each trigger runs
-    * the batch engine's own pruned screen
-    * ([[graft.ops.Dedup.nearDupMatchesPruned]] — one verification
+    * the batch engine's own index screen, whose small-probe route
+    * prunes ([[graft.ops.Dedup.nearDupMatches]] — one verification
     * definition with every other screen, so verdicts cannot drift) and
     * hands the DISTINCT verified (doc_id, corpus_id) match rows plus
     * the batch id to `sink`. Per-trigger index I/O is
@@ -318,28 +319,25 @@ object EventStream {
         org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // Stage.scoped: the per-trigger screen stages three barriers
-        // (batch shingles, band rows, candidates) that only exist
-        // inside this callback — without the scope a long-running
-        // stream pins 3 caches per trigger FOREVER (review r18). The
-        // sink must consume the frame inside the callback (standard
-        // foreachBatch contract); after it returns the trigger's
-        // staged frames are released. Scoped on BATCH.sparkSession,
-        // not `s`: Structured Streaming runs foreachBatch under the
-        // query's CLONED session (StreamExecution.sparkSessionForStream
-        // — ForeachBatchSink builds the batch Dataset from it), every
-        // barrier here derives from `batch`, and Stage tracks frames
-        // under df.sparkSession — a scope keyed on the outer session
-        // would snapshot an unrelated set and release NOTHING
-        // (ADVICE r18; EventStreamSpec pins the clone's count at 0
-        // post-stop).
+        // Stage.scoped: the per-trigger screen stages the batch shingles, which
+        // only exist inside this callback — without the scope a long-running
+        // stream pins a cache per trigger FOREVER (review r18). The sink must
+        // consume the frame inside the callback (standard foreachBatch
+        // contract); after it returns the trigger's staged frames are released.
+        // Scoped on BATCH.sparkSession, not `s`: Structured Streaming runs
+        // foreachBatch under the query's CLONED session
+        // (StreamExecution.sparkSessionForStream — ForeachBatchSink builds the
+        // batch Dataset from it), every barrier here derives from `batch`, and
+        // Stage tracks frames under df.sparkSession — a scope keyed on the
+        // outer session would snapshot an unrelated set and release NOTHING
+        // (ADVICE r18; EventStreamSpec pins the clone's count at 0 post-stop).
         // one attempt = rebuild the screen (the pruned scan lists the
         // index files at CALL time) and hand it to the sink; the scope
         // releases the attempt's staged frames even when the sink's
         // action dies mid-flight, so a retry re-stages from clean state
         def attempt(): Unit =
           graft.ops.Stage.scoped(batch.sparkSession) {
-            sink(graft.ops.Dedup.nearDupMatchesPruned(s, batch.toDF(),
+            sink(graft.ops.Dedup.nearDupMatches(s, batch.toDF(),
               bandTable, shingleTable, n, k, bands, numer, denom, textCol,
               maxLits), id)
           }

@@ -70,6 +70,11 @@ class NearDupIndexSpec extends SparkSpec {
           s"only-inline=${(inline -- prod).take(5)}")
       assert(prod.exists(_._3) && prod.exists(!_._3),
         "fixture must exercise both verdicts")
+      // the full batch (500 docs × 16 bands > 2·maxLits) routes in
+      // place by its count: the same rows as the forced in-place route
+      assert(verdicts(Dedup.incrementalNearDedupFrom(spark, batch,
+        "nd_bands_t", "nd_shingles_t", maxLits = 0)) == prod,
+        "count-routed screen diverged from the forced in-place screen")
 
       // the PRUNED small-probe screen on a TRICKLE slice (its rail
       // caps at ~128 docs × 16 bands; past it the operator falls back
@@ -83,11 +88,11 @@ class NearDupIndexSpec extends SparkSpec {
       // #2 / r18 #5). The hash-vs-file parity itself is pinned in
       // PartitionedStoreSpec.
       val trickle = batch.orderBy(col("doc_id")).limit(60)
-      val pruned = Dedup.incrementalNearDedupPruned(spark, trickle,
+      val pruned = Dedup.incrementalNearDedupFrom(spark, trickle,
         "nd_bands_t", "nd_shingles_t")
       assert(verdicts(pruned) ==
         verdicts(Dedup.incrementalNearDedupFrom(spark, trickle,
-          "nd_bands_t", "nd_shingles_t")),
+          "nd_bands_t", "nd_shingles_t", maxLits = 0)),
         "pruned screen diverged from the in-place screen")
       // a 60-doc trickle's 960 band keys touch all 32 buckets, so the
       // band side correctly routes to the catalog in-place plan
@@ -97,11 +102,11 @@ class NearDupIndexSpec extends SparkSpec {
       // genBucketSet) probed via the broadcast local band relation —
       // the r19 fast path, verdict-identical
       val tiny = batch.orderBy(col("doc_id")).limit(2)
-      val tinyPruned = Dedup.incrementalNearDedupPruned(spark, tiny,
+      val tinyPruned = Dedup.incrementalNearDedupFrom(spark, tiny,
         "nd_bands_t", "nd_shingles_t")
       assert(verdicts(tinyPruned) ==
         verdicts(Dedup.incrementalNearDedupFrom(spark, tiny,
-          "nd_bands_t", "nd_shingles_t")),
+          "nd_bands_t", "nd_shingles_t", maxLits = 0)),
         "tiny pruned screen diverged from the in-place screen")
       val tinyPlan = tinyPruned.queryExecution.executedPlan.toString
       assert(!tinyPlan.contains("Bucketed: true"),
@@ -110,7 +115,7 @@ class NearDupIndexSpec extends SparkSpec {
         s"tiny probe must join via broadcast:\n$tinyPlan")
       // and the rail: a probe past maxLits must still be CORRECT
       // (falls back to the unpruned plan, never truncates the key set)
-      assert(verdicts(Dedup.incrementalNearDedupPruned(spark, batch,
+      assert(verdicts(Dedup.incrementalNearDedupFrom(spark, batch,
         "nd_bands_t", "nd_shingles_t", maxLits = 10)) == prod,
         "rail fallback diverged")
 
@@ -209,13 +214,13 @@ class NearDupIndexSpec extends SparkSpec {
   test("overflow-probe barriers track the probe's session, so a " +
       "trigger scope can release them") {
     // the mid-rail overflow branch (keys <= maxLits but verified
-    // candidates > 4*maxLits) rebuilds its distributed candidate
-    // relation from the BATCH-derived band rows: barriers track under
-    // their frame's session, and in a foreachBatch trigger that is the
-    // stream's cloned session — the one Stage.scoped releases. A cand
-    // barrier rooted at the driver-local probe relation (caller
-    // session) would escape every trigger scope and pin one cache per
-    // overflow trigger forever (round-close review r19).
+    // candidates > 4*maxLits) keeps its candidate relation lazy and
+    // stages nothing: barriers track under their frame's session, and
+    // in a foreachBatch trigger that is the stream's cloned session —
+    // the one Stage.scoped releases. A barrier rooted at the
+    // driver-local probe relation (caller session) would escape every
+    // trigger scope and pin one cache per overflow trigger forever
+    // (round-close review r19).
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ovf")
       .toString
@@ -242,7 +247,7 @@ class NearDupIndexSpec extends SparkSpec {
       // past candCap = 160 -> the overflow branch runs
       var n = -1L
       Stage.scoped(clone) {
-        n = Dedup.incrementalNearDedupPruned(spark, probe, bt, st,
+        n = Dedup.incrementalNearDedupFrom(spark, probe, bt, st,
           maxLits = 40).filter(col("kept") === false).count()
       }
       assert(n == 1L, s"probe must be flagged against all copies: $n")
@@ -250,6 +255,12 @@ class NearDupIndexSpec extends SparkSpec {
         "overflow barriers escaped the probe-session scope")
       assert(Stage.stagedCount(spark) == outerBefore,
         "overflow barriers leaked onto the caller session")
+      // and the overflow route's verdicts are the in-place route's
+      def screen(maxLits: Int) = Stage.scoped(clone) {
+        verdicts(Dedup.incrementalNearDedupFrom(spark, probe, bt, st,
+          maxLits = maxLits))
+      }
+      assert(screen(40) == screen(0), "overflow route diverged")
     } finally {
       for (t <- Seq(bt, st)) spark.sql(s"DROP TABLE IF EXISTS $t")
     }

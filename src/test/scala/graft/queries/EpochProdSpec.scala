@@ -31,7 +31,8 @@ class EpochProdSpec extends SparkSpec {
       // bucket layout with no shuffle at any corpus size
       val batch = spark.read.parquet(s"$sf/documents.parquet")
         .select(col("doc_id"), col("text"))
-      val kept = DedupSim.epochExactScreenFrom(spark, batch, tbl)
+      val kept = graft.ops.Dedup.incrementalDedupFrom(spark, batch, tbl)
+        .select(col("doc_id"))
       assert(nShuffles(kept) == 2,
         kept.queryExecution.executedPlan.toString)
       assert(kept.queryExecution.executedPlan.toString
@@ -98,5 +99,18 @@ class EpochProdSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.conf.set("spark.sql.shuffle.partitions", parts)
     }
+  }
+
+  test("the landing pipeline is epoch 1 of the epoch chain") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val landing = rows(DedupSim.landingPipeline(spark, sf))
+    val epoch1 = rows(DedupSim.epochRefresh(spark, sf)
+      .filter(col("epoch") === 1).select(col("doc_id"), col("status")))
+    assert(landing == epoch1,
+      s"landing/epoch-1 diverged: only-landing=${(landing -- epoch1)
+        .take(5)} only-epoch1=${(epoch1 -- landing).take(5)}")
+    assert(landing.map(_._2) ==
+      Set("screened", "dup_exact", "dup_near", "published"))
   }
 }
