@@ -59,26 +59,12 @@ object Explore {
   def run(spark: SparkSession, name: String): DataFrame =
     spark.sql(queries(name))
 
-  /** Typed DataFrame equivalents of the same eight queries (SURVEY.md §7
-    * module 6) — identical semantics, composed from the pipeline's
-    * DataFrames instead of SQL text. ExploreSpec asserts equality. */
+  /** The typed DataFrame form of the report's join query, composed from
+    * the pipeline's DataFrames instead of SQL text — identical semantics
+    * (ExploreSpec asserts equality, and holds the other seven queries'
+    * DataFrame forms as its reference). */
   object df {
     import org.apache.spark.sql.functions._
-
-    def waysCount(p: OsmPipeline): DataFrame =
-      p.ways.agg(count(lit(1)).as("cnt"))
-
-    def nodesCount(p: OsmPipeline): DataFrame =
-      p.nodes.agg(count(lit(1)).as("cnt"))
-
-    def distinctUsers(p: OsmPipeline): DataFrame =
-      p.nodes.select(col("uid"))
-        .union(p.ways.select(col("uid")))
-        .agg(countDistinct(col("uid")).as("n_users"))
-
-    def updateCounts(p: OsmPipeline, field: String): DataFrame =
-      p.updateHistory.filter(col("field_updated") === field)
-        .agg(count(lit(1)).as("cnt"))
 
     def updatedUsersVsContributions(p: OsmPipeline): DataFrame = {
       val uh = p.updateHistory
@@ -93,22 +79,6 @@ object Explore {
         .groupBy(col("uid")).agg(count(lit(1)).as("contributions"))
       updates.join(contribs, Seq("uid"), "left")
         .orderBy(desc("contributions"))
-    }
-
-    def namedBuildingsAmenities(p: OsmPipeline): DataFrame = {
-      val wt = p.wayTags
-      val named = wt.filter(col("key") === "name").select(col("id")).distinct()
-      wt.filter(col("key") === "amenity" || col("key") === "building")
-        .join(named, Seq("id"), "left_semi")
-        .agg(countDistinct(col("id")).as("cnt"))
-    }
-
-    def unnamedBuildingsAmenities(p: OsmPipeline): DataFrame = {
-      val wt = p.wayTags
-      val named = wt.filter(col("key") === "name").select(col("id")).distinct()
-      wt.filter(col("key") === "amenity" || col("key") === "building")
-        .join(named, Seq("id"), "left_anti")
-        .agg(countDistinct(col("id")).as("cnt"))
     }
   }
 

@@ -54,8 +54,9 @@ object OsmIngest {
   // Scan note (measured, MultiFileScanSpec): the XML source parallelizes
   // across FILES but never splits one file — and multiLine=false "splits"
   // by mis-parsing. At scale, shard the extract into many files (the
-  // standard 100 TB shape); for a single big file, repartition after the
-  // scan so downstream shaping/cleaning still uses every core.
+  // standard 100 TB shape); a single big file is repartitioned after the
+  // scan to the pipeline's byte-sized width (OsmPipeline.width), so
+  // downstream shaping/cleaning still uses every core.
   // FAILFAST: the source's default, PERMISSIVE, turns a malformed element
   // into an all-NULL row and drops the element after it, with no error.
   private def readXml(spark: SparkSession, path: String, rowTag: String,

@@ -56,28 +56,36 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   // on one task, and every shaped relation (nodes, ways, tags ×2, way
   // nodes) re-parses it otherwise — five single-threaded passes.
   //
-  // The XML source never splits one file (OsmIngest scan notes), so an
-  // unsharded 306 MB+ extract arrives as ONE partition: repartition before
-  // the staging cache so every downstream pass — shaping, regex cleaning,
-  // joins — runs on all cores, not one. Partitions are sized by INPUT
-  // BYTES (~1 MB of raw XML each), capped at the cluster's parallelism —
-  // a 306 MB extract fans out to every core, while a few-MB sample stays
-  // at a handful of partitions instead of paying per-task overhead ×32
-  // on every one of the pipeline's jobs (measured via OsmProfile). A
-  // well-sharded input keeps its layout (no gratuitous shuffle).
-  private val SpreadBytesPerPartition = 1L << 20
+  // Every staged relation has ONE width, sized by the extract's INPUT
+  // BYTES ([[OsmPipeline.width]]: one partition per
+  // [[OsmPipeline.BytesPerPartition]] of raw XML, capped at the cluster's
+  // parallelism). The XML source never splits one file (OsmIngest scan
+  // notes), so an unsharded 306 MB extract arrives as ONE partition and
+  // is repartitioned to every core before the staging cache. A few-MB
+  // extract stays ONE partition end to end: the raw scans and the two
+  // union-built relations are coalesced to one, their cached leaves
+  // carry `SinglePartition`, and every count, group-by and sort the
+  // report runs over them plans with no exchange — at that size a shuffle
+  // costs more than the cores it would occupy. A well-sharded input above
+  // the bound keeps its layout (no gratuitous shuffle).
   private lazy val inputBytes: Long = {
     val hPath = new org.apache.hadoop.fs.Path(osmPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Option(fs.globStatus(hPath)).map(_.map(_.getLen).sum).getOrElse(0L)
   }
-  private def spread(df: DataFrame): DataFrame = {
-    val byBytes = (inputBytes + SpreadBytesPerPartition - 1) /
-      SpreadBytesPerPartition
-    val target = math.min(spark.sparkContext.defaultParallelism.toLong,
-      math.max(1L, byBytes)).toInt
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
+  private lazy val width: Int =
+    OsmPipeline.width(inputBytes, spark.sparkContext.defaultParallelism)
+
+  /** `df` at the pipeline's width, ahead of its staging barrier: the one
+    * place OSM relations are repartitioned or coalesced
+    * (tools/tripwire.sh). Width 1 coalesces, so the staged leaf reports
+    * `SinglePartition`; a wider input that arrives in fewer partitions
+    * than the width is spread, and one that arrives in more keeps its
+    * layout. */
+  private def fitted(df: DataFrame): DataFrame =
+    if (width == 1) df.coalesce(1)
+    else if (df.rdd.getNumPartitions < width) df.repartition(width)
+    else df
 
   /** Strict scan by default; with [[quarantineDir]] set, a PERMISSIVE scan
     * whose malformed records are written to `<dir>/<kind>` as text while
@@ -88,9 +96,9 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
   private def stagedRaw(kind: String, strict: => DataFrame,
       permissive: => DataFrame): DataFrame =
     quarantineDir match {
-      case None => graft.ops.Stage.barrier(spread(strict))
+      case None => graft.ops.Stage.barrier(fitted(strict))
       case Some(q) =>
-        val raw = graft.ops.Stage.barrier(spread(permissive))
+        val raw = graft.ops.Stage.barrier(fitted(permissive))
         raw.filter(col("_corrupt_record").isNotNull)
           .select(col("_corrupt_record"))
           .write.mode("overwrite").text(s"$q/$kind")
@@ -168,10 +176,10 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
       elements.filter(col(flag)).select(col("id"),
         lit(kind).as("element_type"), lit(field).as("field_updated"))
     // referenced twice (way + node branches) by the contributions query
-    graft.ops.Stage.barrier(
+    graft.ops.Stage.barrier(fitted(
       flagged(nodesFixedM(), "phone_updated", "node", "phone")
         .unionByName(flagged(waysFixedM(), "phone_updated", "way", "phone"))
-        .unionByName(flagged(waysFixedM(), "name_updated", "way", "name")))
+        .unionByName(flagged(waysFixedM(), "name_updated", "way", "name"))))
   }
   def updateHistory: DataFrame = updateHistoryM()
 
@@ -181,7 +189,7 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     * the reference's first-seen character order; [[phoneAuditRows]] is the
     * public reference row shape. */
   private val phoneAuditM = memo("phoneAudit")(graft.ops.Stage.barrier(
-    Audits.phoneNumbersOrdered(rawNodeTags, rawWayTags)))
+    fitted(Audits.phoneNumbersOrdered(rawNodeTags, rawWayTags))))
   def phoneAudit: DataFrame = phoneAuditM()
 
   def phoneAuditRows: DataFrame =
@@ -223,6 +231,22 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
       w(nodes, "nodes"), w(nodeTags, "nodes_tags"), w(ways, "ways"),
       w(wayNodes, "ways_nodes"), w(wayTags, "ways_tags"),
       w(updateHistory, "update_history")))
+  }
+}
+
+object OsmPipeline {
+
+  /** Raw XML per staged partition (32 MiB). Below it an extract stages as
+    * one partition; the calibration behind the value is in BENCH_NOTES
+    * (2026-10-20). */
+  val BytesPerPartition: Long = 32L << 20
+
+  /** The width of every staged OSM relation for an extract of
+    * `inputBytes`: ceil(inputBytes / [[BytesPerPartition]]), clamped to
+    * [1, cores]. */
+  def width(inputBytes: Long, cores: Int): Int = {
+    val byBytes = (inputBytes + BytesPerPartition - 1) / BytesPerPartition
+    math.max(1L, math.min(cores.toLong, byBytes)).toInt
   }
 }
 

@@ -393,9 +393,20 @@ object DedupSim {
     epoch1Status(s, dir).select(col("doc_id"), col("status"))
 
   // each epoch's landing and published store, written once per (session,
-  // dir): reps re-read the landed files, as a real landing zone would
-  private val epoch1Cache = new graft.ops.SessionScoped[(String, String)]
-  private val epoch2Cache = new graft.ops.SessionScoped[(String, String)]
+  // dir); the batch is read back from the landed files, as a real landing
+  // zone would, and staged once with its screens
+  private val epoch1Cache = new graft.ops.SessionScoped[EpochLanding]
+  private val epoch2Cache = new graft.ops.SessionScoped[EpochLanding]
+
+  /** One epoch's landing path and published store, with the screens its
+    * publish step staged: the landed batch, its gopher-passed ids, the
+    * screened rows and the exact-kept ids. The status cascade and the
+    * near-dup index screen read these frames instead of staging them
+    * again; they sit in the release-scoped memo with the paths, so a
+    * release drops both together. */
+  private final case class EpochLanding(landPath: String, pubPath: String,
+      landed: DataFrame, passed: DataFrame, screened: DataFrame,
+      exactKept: DataFrame)
 
   /** The INCREMENTAL EPOCH CHAIN end-to-end (VERDICT r15 #7): epoch 1
     * lands the recrawl batch (JSONL), screens (gopher), exact-dedups and
@@ -443,11 +454,14 @@ object DedupSim {
           regexp_replace(col("text"), "^[^ ]* ", ""))
         .otherwise(translate(col("text"), "td", "78")).as("text"))
 
-  /** One epoch's screens: (gopher-passed ids, screened rows, exact-kept
-    * ids) of `landed` against `corpus`. */
-  private def epochScreenOf(landed: DataFrame, corpus: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
+  /** Screens `landPath`'s batch against `corpus` (gopher gate, exact
+    * screen, near-dup screen) and publishes the survivors to `pubPath`;
+    * returns the epoch with its staged screens. */
+  private def epochPublish(s: SparkSession, landPath: String,
+      corpus: DataFrame, pubPath: String): EpochLanding = {
     import graft.ops.{Stage, TextAnalysis}
+    val landed = Stage.barrier(
+      graft.sources.JsonlStore.readJsonl(s, landPath, epochSchema))
     val passed = TextAnalysis.gopherRules(landed)
       .filter(col("gopher_pass")).select(col("doc_id"))
     val screened = Stage.barrier(
@@ -455,13 +469,6 @@ object DedupSim {
     val seen = corpus.select(sha2(lower(col("text")), 256).as("digest"))
     val exactKept = Stage.barrier(
       Dedup.incrementalDedup(screened, seen).select(col("doc_id")))
-    (passed, screened, exactKept)
-  }
-
-  private def epochPublish(landed: DataFrame, corpus: DataFrame,
-      pubPath: String): Unit = {
-    import graft.ops.{Stage, TextAnalysis}
-    val (_, screened, exactKept) = epochScreenOf(landed, corpus)
     val survivors = Stage.barrier(
       screened.join(exactKept, Seq("doc_id"), "left_semi"))
     val near = Dedup.incrementalNearDedup(survivors, corpus)
@@ -471,13 +478,14 @@ object DedupSim {
       .withColumn("split", TextAnalysis.splitAssign(col("doc_id"))))
     graft.sources.Publish.parquet(toPublish, pubPath,
       rowAudit = _ == expected)
+    EpochLanding(landPath, pubPath, landed, passed, screened, exactKept)
   }
 
-  /** Lands + publishes epoch 1 once per (session, dir); returns
-    * (land1, pub1) paths — the landing zone's, shared by
-    * [[landingPipeline]] and every epoch chain built on it. */
+  /** Lands + publishes epoch 1 once per (session, dir) — the landing
+    * zone's, shared by [[landingPipeline]] and every epoch chain built
+    * on it. */
   private def epoch1Artifacts(s: SparkSession, dir: String)
-      : (String, String) = {
+      : EpochLanding = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
     epoch1Cache.getOrCompute(s, dir) {
       // sanitized dir + hash: two DISTINCT sf dirs can never share a
@@ -487,34 +495,30 @@ object DedupSim {
         dir.replaceAll("[^A-Za-z0-9._-]", "_") +
         f"-${dir.hashCode & 0xffffffffL}%08x"
       graft.sources.JsonlStore.writeJsonl(landingBatch(docs), land1)
-      val pub1Path = s"$land1.published"
-      epochPublish(graft.ops.Stage.barrier(
-        graft.sources.JsonlStore.readJsonl(s, land1, epochSchema)),
-        docs, pub1Path)
-      (land1, pub1Path)
+      epochPublish(s, land1, docs, s"$land1.published")
     }
   }
 
   /** [[epoch1Artifacts]] plus epoch 2 landed + published on top of them
-    * once per (session, dir): (land1, pub1, land2, pub2) paths. */
+    * once per (session, dir). */
   private def epochArtifacts(s: SparkSession, dir: String)
-      : (String, String, String, String) = {
+      : (EpochLanding, EpochLanding) = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (land1, pub1Path) = epoch1Artifacts(s, dir)
-    val (land2, pub2Path) = epoch2Cache.getOrCompute(s, dir) {
+    val e1 = epoch1Artifacts(s, dir)
+    val e2 = epoch2Cache.getOrCompute(s, dir) {
       val base = graft.sources.PartitionedStore.storePath("epochs", dir)
-      val pub1 = graft.sources.Publish.readPublished(s, pub1Path)
-        .select(col("doc_id"), col("text"))
+      val pub1 = pub1Of(s, e1)
       val land2 = s"$base/land2"
       graft.sources.JsonlStore.writeJsonl(epoch2BatchOf(pub1), land2)
-      val pub2Path = s"$base/pub2"
-      epochPublish(graft.ops.Stage.barrier(
-        graft.sources.JsonlStore.readJsonl(s, land2, epochSchema)),
-        docs.unionByName(pub1), pub2Path)
-      (land2, pub2Path)
+      epochPublish(s, land2, docs.unionByName(pub1), s"$base/pub2")
     }
-    (land1, pub1Path, land2, pub2Path)
+    (e1, e2)
   }
+
+  /** Epoch 1's published docs, read back from its store. */
+  private def pub1Of(s: SparkSession, e1: EpochLanding): DataFrame =
+    graft.sources.Publish.readPublished(s, e1.pubPath)
+      .select(col("doc_id"), col("text"))
 
   /** One epoch's per-landed-doc verdict frame — the ONE status cascade
     * shared by [[epochRefresh]] (publish-store marker, stored split)
@@ -522,17 +526,14 @@ object DedupSim {
     * split), so the four-way status rule cannot drift between the two
     * chains (review r18). `published` carries (doc_id, split) for
     * exactly the epoch's published docs, however the caller derives
-    * it. */
-  private def epochStatusOf(s: SparkSession, epoch: Int, landPath: String,
-      corpus: DataFrame, published: DataFrame): DataFrame = {
-    val landed = graft.ops.Stage.barrier(
-      graft.sources.JsonlStore.readJsonl(s, landPath, epochSchema))
-    val (passed, _, exactKept) = epochScreenOf(landed, corpus)
-    statusCascadeOf(epoch, landed, passed, exactKept, published)
-  }
+    * it; the screens are the ones the epoch's publish step staged. */
+  private def epochStatusOf(epoch: Int, e: EpochLanding,
+      published: DataFrame): DataFrame =
+    statusCascadeOf(epoch, e.landed, e.passed, e.exactKept, published)
 
   /** The cascade join itself, over however the caller derived each
-    * screen's survivors — [[epochStatusOf]] feeds it inline recomputes;
+    * screen's survivors — [[epochStatusOf]] feeds it the publish step's
+    * staged screens;
     * [[epochFullArtifacts]] feeds it the persisted-STORE screens. ONE
     * join/when definition either way. */
   private def statusCascadeOf(epoch: Int, landed: DataFrame,
@@ -553,19 +554,15 @@ object DedupSim {
 
   /** Epoch 1's status cascade against the base corpus. */
   private def epoch1Status(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (l1, p1) = epoch1Artifacts(s, dir)
-    epochStatusOf(s, 1, l1, docs, graft.sources.Publish.readPublished(s, p1))
+    val e1 = epoch1Artifacts(s, dir)
+    epochStatusOf(1, e1, graft.sources.Publish.readPublished(s, e1.pubPath))
   }
 
   def epochRefresh(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (_, p1, l2, p2) = epochArtifacts(s, dir)
-    val pub1 = graft.sources.Publish.readPublished(s, p1)
-      .select(col("doc_id"), col("text"))
+    val (_, e2) = epochArtifacts(s, dir)
     epoch1Status(s, dir)
-      .unionByName(epochStatusOf(s, 2, l2, docs.unionByName(pub1),
-        graft.sources.Publish.readPublished(s, p2)))
+      .unionByName(epochStatusOf(2, e2,
+        graft.sources.Publish.readPublished(s, e2.pubPath)))
   }
 
   // the refreshed-corpus digest store, published once per (session, dir)
@@ -584,14 +581,12 @@ object DedupSim {
   private[graft] def epochDigestStore(s: SparkSession, dir: String)
       : String = {
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (_, p1) = epoch1Artifacts(s, dir)
+    val e1 = epoch1Artifacts(s, dir)
     epochDigestTable.getOrCompute(s, dir) {
       val (t, path) =
         graft.sources.PartitionedStore.storeNames("epochdig", dir)
-      val pub1 = graft.sources.Publish.readPublished(s, p1)
-        .select(col("doc_id"), col("text"))
       graft.sources.PartitionedStore.writeBucketed(
-        docs.unionByName(pub1)
+        docs.unionByName(pub1Of(s, e1))
           .select(sha2(lower(col("text")), 256).as("digest")),
         t, path, "digest", 32, Seq("digest"))
       t
@@ -607,9 +602,10 @@ object DedupSim {
     * hash-mismatch). The gate runs ONCE; the screen join consumes its
     * barriered output (the sibling chains' staging pattern). */
   def epochRefreshProd(s: SparkSession, dir: String): DataFrame = {
-    val (_, _, l2, _) = epochArtifacts(s, dir)
+    val (_, e2) = epochArtifacts(s, dir)
     val tbl = epochDigestStore(s, dir)
-    val landed = graft.sources.JsonlStore.readJsonl(s, l2, epochSchema)
+    val landed = graft.sources.JsonlStore.readJsonl(s, e2.landPath,
+      epochSchema)
     val passed = graft.ops.TextAnalysis.gopherRules(landed)
       .filter(col("gopher_pass")).select(col("doc_id"))
     val screened = graft.ops.Stage.barrier(
@@ -639,7 +635,7 @@ object DedupSim {
       : (String, String, String, String) = {
     import graft.ops.Stage
     val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (l1, p1, l2, _) = epochArtifacts(s, dir)
+    val (e1, e2) = epochArtifacts(s, dir)
     epochNdCache.getOrCompute(s, dir) {
       val (bt, btPath) =
         graft.sources.PartitionedStore.storeNames("epochnd_bands", dir)
@@ -647,13 +643,9 @@ object DedupSim {
         graft.sources.PartitionedStore.storeNames("epochnd_shingles", dir)
       Dedup.buildNearDupIndex(docs, bt, btPath, st, stPath)
       // an epoch's near-screen input is its exact-surviving landed docs
-      // (the same relation epochPublish screens inline)
-      def survivorsOf(landPath: String, corpus: DataFrame): DataFrame = {
-        val landed = Stage.barrier(
-          graft.sources.JsonlStore.readJsonl(s, landPath, epochSchema))
-        val (_, screened, exactKept) = epochScreenOf(landed, corpus)
-        screened.join(exactKept, Seq("doc_id"), "left_semi")
-      }
+      // (the relation epochPublish staged)
+      def survivorsOf(e: EpochLanding): DataFrame =
+        e.screened.join(e.exactKept, Seq("doc_id"), "left_semi")
       def publishVerdicts(sv: DataFrame, path: String): Unit = {
         val (svb, expected) = Stage.barrierCounted(sv)
         graft.sources.Publish.parquet(
@@ -662,16 +654,14 @@ object DedupSim {
       }
       val near1 =
         graft.sources.PartitionedStore.storePath("epochnd_near1", dir)
-      publishVerdicts(survivorsOf(l1, docs), near1)
+      publishVerdicts(survivorsOf(e1), near1)
       // the epoch boundary: the ONE index is refreshed by appending
       // epoch 1's publishes; epoch 2 screens the appended tables in
       // place — no rebuild, no per-epoch corpus chain re-derivation
-      val pub1 = graft.sources.Publish.readPublished(s, p1)
-        .select(col("doc_id"), col("text"))
-      Dedup.appendNearDupIndex(pub1, bt, st)
+      Dedup.appendNearDupIndex(pub1Of(s, e1), bt, st)
       val near2 =
         graft.sources.PartitionedStore.storePath("epochnd_near2", dir)
-      publishVerdicts(survivorsOf(l2, docs.unionByName(pub1)), near2)
+      publishVerdicts(survivorsOf(e2), near2)
       (bt, st, near1, near2)
     }
   }
@@ -692,11 +682,8 @@ object DedupSim {
     * .splitAssign]] on published rows — the same deterministic rule the
     * publish path stamps into the store. */
   def epochRefreshIdx(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-    val (l1, p1, l2, _) = epochArtifacts(s, dir)
+    val (e1, e2) = epochArtifacts(s, dir)
     val (_, _, near1, near2) = epochNdArtifacts(s, dir)
-    val pub1 = graft.sources.Publish.readPublished(s, p1)
-      .select(col("doc_id"), col("text"))
     // published = near-kept survivors of the MATERIALIZED index screen;
     // split is the same deterministic rule the publish path stamps (a
     // near-kept doc is a gate+exact survivor by construction, so the
@@ -706,9 +693,8 @@ object DedupSim {
         .filter(col("kept"))
         .select(col("doc_id"),
           graft.ops.TextAnalysis.splitAssign(col("doc_id")).as("split"))
-    epochStatusOf(s, 1, l1, docs, keptOf(near1))
-      .unionByName(
-        epochStatusOf(s, 2, l2, docs.unionByName(pub1), keptOf(near2)))
+    epochStatusOf(1, e1, keptOf(near1))
+      .unionByName(epochStatusOf(2, e2, keptOf(near2)))
   }
 
   // the FULL steady-state production chain's artifacts: all three

@@ -51,17 +51,19 @@ class MultiFileScanSpec extends SparkSpec {
   }
 
   test("pipeline spreads a single-file scan proportionally to its bytes") {
-    // the mitigation pinned below, WIRED: OsmPipeline repartitions an
-    // unsharded input before the staging cache — ~1 MB of raw XML per
-    // partition, capped at defaultParallelism — so shaping/cleaning fans
-    // out even though the parse is one task, without paying max-core task
-    // overhead on a small sample. shatin.osm is 3.7 MB → ceil = 4
-    // partitions, which on this local[4] session is also the cap.
+    // the width rule, WIRED: OsmPipeline stages every relation at
+    // OsmPipeline.width(input bytes, defaultParallelism) partitions —
+    // one per BytesPerPartition of raw XML, capped at the cores — so a
+    // reference-scale extract fans out even though the parse is one task,
+    // while a few-MB sample stays one partition and its report plans no
+    // exchange. shatin.osm's 3.7 MB is below the bound: width 1.
     val pipe = OsmPipeline(spark, OsmInputs.osm, OsmInputs.official)
     val parts = pipe.nodes.rdd.getNumPartitions
-    val expected = math.min(spark.sparkContext.defaultParallelism, 4)
-    assert(parts >= expected,
-      s"downstream of a single-file scan ran on $parts partition(s)")
+    val bytes = java.nio.file.Files.size(Paths.get(OsmInputs.osm))
+    val expected = OsmPipeline.width(bytes,
+      spark.sparkContext.defaultParallelism)
+    assert(parts == expected,
+      s"a $bytes-byte single-file scan staged on $parts partition(s)")
     assert(pipe.nodes.count() == 13676)
   }
 

@@ -336,4 +336,39 @@ class OsmPipelineInlineSpec extends SparkSpec {
       }
     } finally Stage.releaseAll(spark)
   }
+
+  test("below BytesPerPartition the staged relations are one partition " +
+      "each, and the report's counts, group-bys and sorts plan no " +
+      "exchange") {
+    val p = newPipeline()
+    try {
+      Seq("nodes" -> p.nodes, "ways" -> p.ways,
+        "update_history" -> p.updateHistory, "phone_audit" -> p.phoneAudit)
+        .foreach { case (name, df) =>
+          assert(df.rdd.getNumPartitions == 1, name)
+        }
+      p.registerViews()
+      val count = Explore.run(spark, "nodes_count")
+      assert(!count.queryExecution.executedPlan.toString.contains("Exchange"))
+      assert(count.head().getLong(0) == 3L)
+      val joined = Explore.run(spark, "updated_users_vs_contributions")
+      assert(nShuffles(joined) == 0)
+      assert(joined.collect().map(r => (r.getString(0), r.getLong(1),
+        r.getLong(2))).toSet == Set(("7", 2L, 5L)))
+    } finally Stage.releaseAll(spark)
+  }
+
+  test("width: 1 up to BytesPerPartition, ceil(bytes / BytesPerPartition) " +
+      "above it, capped at the cores") {
+    val b = OsmPipeline.BytesPerPartition
+    assert(OsmPipeline.width(0L, 4) == 1)
+    assert(OsmPipeline.width(b, 4) == 1)
+    assert(OsmPipeline.width(b + 1, 4) == 2)
+    assert(OsmPipeline.width(3 * b, 4) == 3)
+    assert(OsmPipeline.width(3 * b + 1, 4) == 4)
+    assert(OsmPipeline.width(404L << 20, 4) == 4)
+    assert(OsmPipeline.width(13 * b + 1, 32) == 14)
+    assert(OsmPipeline.width(100 * b, 32) == 32)
+    assert(OsmPipeline.width(b + 1, 1) == 1)
+  }
 }

@@ -30,6 +30,12 @@
 # recipe applies Tables.configure — a session built any other way would
 # leave that cache at Spark's default of 100.
 #
+# It also refuses a second home for the OSM pipeline's partition width:
+# every staged OSM relation has one width, sized by the extract's bytes
+# (graft.osm.OsmPipeline.width), so `.repartition(` and `.coalesce(` may
+# appear under src/main/scala/graft/osm/ only inside OsmPipeline's
+# `fitted` helper (from its `def fitted(` line to the next blank line).
+#
 # Usage: tools/tripwire.sh
 set -e
 cd "$(dirname "$0")/.."
@@ -64,6 +70,21 @@ stray=$(grep -rlE 'SparkSession\.builder([^A-Za-z0-9_]|$)' src/main/scala |
   grep -vx "$tables" || true)
 if [ -n "$stray" ]; then
   echo "tripwire: SparkSession.builder outside $tables:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+osm=src/main/scala/graft/osm
+stray=$({
+  grep -rnE '\.(repartition|coalesce)\(' "$osm" |
+    grep -v "^$osm/OsmPipeline.scala:"
+  awk -v f="$osm/OsmPipeline.scala" '
+    /def fitted\(/ { h = 1 }
+    h && /^[[:space:]]*$/ { h = 0 }
+    !h && /\.(repartition|coalesce)\(/ { print f ":" FNR ": " $0 }
+  ' "$osm/OsmPipeline.scala"
+} || true)
+if [ -n "$stray" ]; then
+  echo "tripwire: repartition/coalesce under $osm outside OsmPipeline.fitted:" >&2
   echo "$stray" >&2
   exit 1
 fi

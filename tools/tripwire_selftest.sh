@@ -1,7 +1,8 @@
 #!/bin/sh
 # Self-test for tools/tripwire.sh: copies the tripwire and src/main/scala
 # into a temporary root, plants one violation per rule in a new source
-# file, and checks that the tripwire exits 1 and names the planted file.
+# file (and, for the OSM width rule, one more inside OsmPipeline.scala),
+# and checks that the tripwire exits 1 and names the planted file.
 # An `sbt` stub stands in for the compile step, so no build runs: the
 # unplanted copy must reach the stub and exit 0, and a rule that misses
 # its violation shows up as exit 0 instead of 1.
@@ -42,11 +43,13 @@ else
   fails=$((fails + 1))
 fi
 
-# plant <rule> <scala line>: one violation in a new file, exit 1 expected
+# plant <rule> <scala line> [package]: one violation in a new file of
+# package graft (or graft.<package>), exit 1 expected
 plant() {
   fresh
-  file=src/main/scala/graft/Planted.scala
-  printf 'package graft\nobject Planted {\n  %s\n}\n' "$2" \
+  pkg=graft${3:+.$3}
+  file=src/main/scala/$(echo "$pkg" | tr . /)/Planted.scala
+  printf 'package %s\nobject Planted {\n  %s\n}\n' "$pkg" "$2" \
     >"$tmp/root/$file"
   run
   if [ "$code" -eq 1 ] && grep -qF "$file" "$tmp/out"; then
@@ -66,6 +69,24 @@ plant "global execution context" \
 plant "stray main" 'def main(args: Array[String]): Unit = ()'
 plant "session builder outside Tables" \
   'def s = org.apache.spark.sql.SparkSession.builder().getOrCreate()'
+plant "OSM repartition outside the width helper" \
+  'def f(d: org.apache.spark.sql.DataFrame) = d.repartition(8)' osm
+plant "OSM coalesce outside the width helper" \
+  'def f(d: org.apache.spark.sql.DataFrame) = d.coalesce(1)' osm
+
+# a coalesce in OsmPipeline.scala itself, outside `fitted`, must fire too
+fresh
+file=src/main/scala/graft/osm/OsmPipeline.scala
+printf '\nobject PlantedWidth {\n  def f(d: org.apache.spark.sql.DataFrame) = d.coalesce(2)\n}\n' \
+  >>"$tmp/root/$file"
+run
+if [ "$code" -eq 1 ] && grep -qF "$file" "$tmp/out"; then
+  echo "ok   OSM coalesce in OsmPipeline.scala outside fitted: exit 1"
+else
+  echo "FAIL OSM coalesce in OsmPipeline.scala outside fitted: exit $code" >&2
+  cat "$tmp/out" >&2
+  fails=$((fails + 1))
+fi
 
 if [ "$fails" -ne 0 ]; then
   echo "tripwire_selftest: $fails case(s) failed" >&2
