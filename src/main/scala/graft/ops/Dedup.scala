@@ -979,38 +979,6 @@ object Dedup {
     hammingPlan(sigs, maxHamming, idCol, sigCol, maxBucket, tileRows,
       survivingBlocks)._1
 
-  /** [[hammingNearDupPairs]] plus the number of (blk, key) buckets the
-    * `maxBucket` rail dropped, counted EAGERLY (one census job at call
-    * time) for callers that must branch on the count — the rail must
-    * never fire SILENTLY (a fired rail is lost recall in a mass-duplicate
-    * region; the operator of a 100 TB run needs the count, not a vibe).
-    * Callers that only need the warn-log visibility should use the lazy
-    * [[hammingNearDupPairs]], whose census surfaces through the
-    * `graft.rail` observation metric instead ([[Rail.observed]]).
-    *
-    * COST under `survivingBlocks = true`: THREE bucket-census passes —
-    * this eager `count`, the plan's own collected ocRow, and the
-    * annotated screen (the r14 audit showed AQE does not share the
-    * underlying exchange between concurrent broadcast stages), stacking
-    * on the knob's documented +51%. Pair the knob with the lazy form
-    * unless the branch-on-count contract is really needed; sharing the
-    * count with the plan's ocRow would mean collecting the census at
-    * call time and inlining it as a literal — a plan-shape change not
-    * worth it for a diagnostics entry point. */
-  def hammingNearDupPairsWithStats(sigs: DataFrame, maxHamming: Int = 6,
-      idCol: String = "doc_id", sigCol: String = "simhash",
-      maxBucket: Int = 100000,
-      survivingBlocks: Boolean = false): (DataFrame, Long) = {
-    val (pairs, overCap) =
-      hammingPlan(sigs, maxHamming, idCol, sigCol, maxBucket,
-        survivingBlocks = survivingBlocks)
-    val droppedBuckets = overCap.count()
-    if (droppedBuckets > 0)
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(hammingRailWarn(maxBucket).format(droppedBuckets))
-    (pairs, droppedBuckets)
-  }
-
   /** The 28 ordered chunk-pair block keys of a 64-bit signature column —
     * (blk = c1*8+c2, key = chunk(c1)*256 + chunk(c2)) — the ONE blocking
     * recipe shared by [[hammingNearDupPairs]]' plan and the streaming

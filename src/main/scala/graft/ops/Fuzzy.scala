@@ -74,8 +74,7 @@ object Fuzzy {
 
   /** [[blockedFuzzyJoin]] plus the number of blocks the `maxBlockPairs`
     * rail dropped, counted EAGERLY (one census job at call time) for
-    * callers that must branch on the count — like
-    * [[Dedup.hammingNearDupPairsWithStats]], the rail must never fire
+    * callers that must branch on the count — the rail must never fire
     * silently (a fired rail means the caller's blocking key degenerated
     * and those probes are unmatched by POLICY, which the operator of a
     * 100 TB run needs to know, not guess). Callers that only need the

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * batched per-partition passes.
   *
   * The actual codec step is STUBBED (no image/audio libraries in this
-  * environment): `decodeStub` derives a deterministic fake feature vector
-  * from the bytes. Everything AROUND the stub is real and load-bearing —
-  * schema, partition-batched execution, feature/frame shapes — so swapping
+  * environment): [[histStub]] derives a deterministic fake feature
+  * histogram from the bytes. Everything AROUND the stub is real and
+  * load-bearing — schema, partition-batched execution, feature/frame
+  * shapes — so swapping
   * in a real decoder (JNI codec or `mapInPandas`+PIL on a PySpark edge) is
   * a one-function change.
   */
@@ -18,8 +19,6 @@ object Multimodal {
 
   case class Media(media_id: Long, kind: String, bytes: Array[Byte],
       width: Int, height: Int)
-  case class MediaFeatures(media_id: Long, kind: String, n_bytes: Int,
-      features: Array[Float])
   case class MediaHist(media_id: Long, kind: String, n_bytes: Int,
       hist: Array[Long])
   case class Frame(media_id: Long, frame_no: Int, offset: Int,
@@ -64,37 +63,14 @@ object Multimodal {
     acc
   }
 
-  /** STUB decoder: a real implementation would decode the codec here.
-    * Deterministic stand-in: feature j = normalized byte histogram moment
-    * ([[histStub]] over byte count). Marked clearly; the pipeline shape
-    * (batched per-partition map, fixed feature dim) is what production
-    * code reuses. */
-  def decodeStub(bytes: Array[Byte], dim: Int): Array[Float] = {
-    val n = math.max(bytes.length, 1)
-    histStub(bytes, dim).map(v => v.toFloat / n)
-  }
-
   /** Feature extraction as a batched per-partition pass — the Scala
     * equivalent of a pandas-batched UDF: one JVM-side loop per partition,
-    * no per-row closure dispatch on the hot path, output schema fixed. */
-  def extractFeatures(media: Dataset[Media], dim: Int = 16):
-      Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        MediaFeatures(m.media_id, m.kind, m.bytes.length,
-          decodeStub(m.bytes, dim))
-      }
-    }
-  }
-
-  /** The integer histogram stage of [[extractFeatures]], same batched
-    * per-partition shape. This is the cross-engine-verified surface:
-    * float features can't hash-compare across engines (JDK 17
-    * Float.toString and DuckDB's shortest-round-trip formatter disagree
-    * on some values), so the oracle checks the exact integer accumulator
-    * the floats are derived from. */
+    * no per-row closure dispatch on the hot path, output schema fixed.
+    * It stops at the integer histogram, the cross-engine-verified
+    * surface: float features (hist / n_bytes) can't hash-compare across
+    * engines (JDK 17 Float.toString and DuckDB's shortest-round-trip
+    * formatter disagree on some values), so the oracle checks the exact
+    * integer accumulator; MultimodalSpec derives the floats from it. */
   def extractHistograms(media: Dataset[Media], dim: Int = 16):
       Dataset[MediaHist] = {
     val spark = media.sparkSession

@@ -42,10 +42,6 @@ final class SessionScoped[V] {
   def allValues: Seq[V] =
     SessionScoped.releaseScopedValues(isMine).map(_.asInstanceOf[Holder].value)
 
-  /** Drop this memo's entries for `s` ahead of a session-wide release. */
-  def evict(s: SparkSession): Unit =
-    SessionScoped.releaseScoped(s).keySet().removeIf(isMine)
-
   def size: Int = SessionScoped.releaseScopedValues(isMine).size
 }
 

@@ -36,12 +36,11 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** [[cosine]] with the norms already materialized as columns — the
-    * per-PAIR loops want this form: a pair loop evaluating `cosine`
-    * directly runs THREE full dot products per (query, candidate) pair,
-    * while each vector's norm is a per-ROW quantity. Computing norms in
+  /** Cosine similarity with the norms already materialized as columns —
+    * the per-PAIR loops want this form: a pair loop evaluating
+    * dot(a, b) / (norm(a) * norm(b)) directly runs THREE full dot products
+    * per (query, candidate) pair, while each vector's norm is a per-ROW
+    * quantity. Computing norms in
     * the projections below the join (projects never collapse across a
     * join) makes the hot loop one dot + one multiply — same doubles,
     * same operation order, bit-identical results. */

@@ -1,6 +1,6 @@
 package graft.osm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The two audit programs (X5 / X6 in SURVEY.md §2.10) as
@@ -16,15 +16,10 @@ object Audits {
     * before cleaning). Keeps street ways with exactly one official match
     * where something still disagrees: a version not found, or fewer than 4
     * versions present. Output: the 4 name versions + the matched official
-    * pair. */
-  def bilingualStreetNames(spark: SparkSession, osmPath: String,
-      officialPath: String): DataFrame =
-    bilingualStreetNames(OsmIngest.rawWays(spark, osmPath),
-      OfficialList.lookup(OfficialList.cleaned(spark, officialPath)))
-
-  /** Same audit over a prepared raw way scan (the `rowTag=way` schema) —
-    * lets callers share a cached scan (OsmPipeline.streetAudit) instead of
-    * re-parsing the XML. Runs the street fix's own probe
+    * pair.
+    *
+    * Runs over a raw way scan (the `rowTag=way` schema; OsmPipeline.
+    * streetAudit passes its staged one) with the street fix's own probe
     * ([[StreetNameFix.probe]]) over each way's unfixed tag array. */
   def bilingualStreetNames(rawWays: DataFrame, lookup: DataFrame): DataFrame =
     StreetNameFix.probe(
@@ -48,20 +43,16 @@ object Audits {
   private def isPhoneShaped(c: org.apache.spark.sql.Column) =
     c.rlike(HkPhoneRe) || c.rlike(SzLandRe) || c.rlike(PrcCellRe)
 
-  /** X6 — phone-number audit (audit_phone_numbers.py:142-162): keep tags
-    * with key phone/fax outright; for other tags, emit ONE ROW PER
-    * `;`-SEGMENT whose shape matches (the reference appends the tag once
-    * per matching segment — duplicates preserved deliberately). */
-  def phoneNumbers(spark: SparkSession, osmPath: String): DataFrame =
-    phoneNumbers(OsmIngest.tags(OsmIngest.rawNodes(spark, osmPath)),
-      OsmIngest.tags(OsmIngest.rawWays(spark, osmPath)))
-
-  /** Same audit over prepared shaped tags (OsmPipeline.phoneAudit), with
-    * the DOCUMENT-ORDER metadata (`_kind`, `_tag_pos`) the char census
-    * needs: the reference walks elements in file order — nodes then ways,
-    * ids ascending within each (verified on the bundled extracts), tags in
-    * element order — so (kind, id, tag_pos) reconstructs its iteration
-    * order distributively. */
+  /** X6 — phone-number audit (audit_phone_numbers.py:142-162) over
+    * shaped tags (OsmPipeline.phoneAudit): keep tags with key phone/fax
+    * outright; for other tags, emit ONE ROW PER `;`-SEGMENT whose shape
+    * matches (the reference appends the tag once per matching segment —
+    * duplicates preserved deliberately). Rows carry the DOCUMENT-ORDER
+    * metadata (`_kind`, `_tag_pos`) the char census needs: the reference
+    * walks elements in file order — nodes then ways, ids ascending within
+    * each (verified on the bundled extracts), tags in element order — so
+    * (kind, id, tag_pos) reconstructs its iteration order distributively.
+    * OsmPipeline.phoneAuditRows is the reference row shape. */
   def phoneNumbersOrdered(nodeTags: DataFrame,
       wayTags: DataFrame): DataFrame = {
     val tags = nodeTags.withColumn("_kind", lit(0))
@@ -78,11 +69,6 @@ object Audits {
       .drop("segment")
     direct.unionByName(shaped)
   }
-
-  /** The audit's public relation (reference row shape). */
-  def phoneNumbers(nodeTags: DataFrame, wayTags: DataFrame): DataFrame =
-    phoneNumbersOrdered(nodeTags, wayTags)
-      .select(col("id"), col("key"), col("value"), col("type"))
 
   /** A4 — key histogram of the phone audit (value_counts,
     * audit_phone_numbers.py:184). */

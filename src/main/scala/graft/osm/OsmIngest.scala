@@ -54,24 +54,40 @@ object OsmIngest {
   // Scan note (measured, MultiFileScanSpec): the XML source parallelizes
   // across FILES but never splits one file — and multiLine=false "splits"
   // by mis-parsing. At scale, shard the extract into many files (the
-  // standard 100 TB shape); a single big file is repartitioned after the
-  // scan to the pipeline's byte-sized width (OsmPipeline.width), so
-  // downstream shaping/cleaning still uses every core.
-  // FAILFAST: the source's default, PERMISSIVE, turns a malformed element
-  // into an all-NULL row and drops the element after it, with no error.
-  private def readXml(spark: SparkSession, path: String, rowTag: String,
-      schema: StructType): DataFrame =
-    spark.read.format("xml")
-      .option("rowTag", rowTag)
-      .option("mode", "FAILFAST")
-      .schema(schema)
+  // standard 100 TB shape); OsmPipeline brings every raw scan to its
+  // byte-sized width (OsmPipeline.width) before staging it, so downstream
+  // shaping/cleaning still uses every core.
+  /** The one OSM XML reader: a `rowTag` scan with an explicit schema.
+    *
+    * Strict (the default) parses FAILFAST: a malformed element fails the
+    * scan. The source's own default, PERMISSIVE, turns a malformed element
+    * into a NULL row and, measured on Spark 4.1, also swallows every
+    * element after it in the same file — for the way scan of a file whose
+    * malformation sits in a node, the whole file — with no error.
+    *
+    * `permissive = true` keeps that parse but makes it visible: the
+    * malformed text lands in `_corrupt_record`, and `_file`
+    * (`input_file_name()`) names the file each row came from, so a caller
+    * can drop every row of a file whose scan went corrupt
+    * (OsmPipeline's quarantine). */
+  private def read(spark: SparkSession, path: String, rowTag: String,
+      schema: StructType, permissive: Boolean): DataFrame = {
+    val xml = spark.read.format("xml").option("rowTag", rowTag)
+    if (!permissive) xml.option("mode", "FAILFAST").schema(schema).load(path)
+    else xml.option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .schema(schema.add("_corrupt_record", StringType))
       .load(path)
+      .withColumn("_file", input_file_name())
+  }
 
-  def rawNodes(spark: SparkSession, path: String): DataFrame =
-    readXml(spark, path, "node", nodeSchema)
+  def rawNodes(spark: SparkSession, path: String,
+      permissive: Boolean = false): DataFrame =
+    read(spark, path, "node", nodeSchema, permissive)
 
-  def rawWays(spark: SparkSession, path: String): DataFrame =
-    readXml(spark, path, "way", waySchema)
+  def rawWays(spark: SparkSession, path: String,
+      permissive: Boolean = false): DataFrame =
+    read(spark, path, "way", waySchema, permissive)
 
   /** rowTag=relation schema — an EXTENSION beyond the reference, which
     * silently skips `<relation>` elements (its shape_element handles only
@@ -87,8 +103,9 @@ object OsmIngest {
       StructField("_type", StringType), StructField("_ref", StringType),
       StructField("_role", StringType)))))))
 
-  def rawRelations(spark: SparkSession, path: String): DataFrame =
-    readXml(spark, path, "relation", relationSchema)
+  def rawRelations(spark: SparkSession, path: String,
+      permissive: Boolean = false): DataFrame =
+    read(spark, path, "relation", relationSchema, permissive)
 
   /** relations(id, user, uid, version, changeset, timestamp). */
   def relations(raw: DataFrame): DataFrame = ways(raw)
@@ -102,27 +119,6 @@ object OsmIngest {
       .select(col("id"), col("m._type").as("member_type"),
         col("m._ref").as("member_ref"), col("m._role").as("role"),
         col("position"))
-
-  /** PERMISSIVE scan for dirty inputs at scale: malformed records land in
-    * `_corrupt_record` instead of failing the job (the 100 TB reality —
-    * a truncated shard must not kill a 1000-executor pipeline). Callers
-    * split on `_corrupt_record IS NULL` and route the rest to quarantine.
-    * The default readers above keep the strict schema: on the bundled
-    * clean extracts a parse failure should fail loudly. */
-  def rawNodesPermissive(spark: SparkSession, path: String): DataFrame =
-    readPermissive(spark, path, "node", nodeSchema)
-
-  def rawWaysPermissive(spark: SparkSession, path: String): DataFrame =
-    readPermissive(spark, path, "way", waySchema)
-
-  private def readPermissive(spark: SparkSession, path: String,
-      rowTag: String, schema: StructType): DataFrame =
-    spark.read.format("xml")
-      .option("rowTag", rowTag)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema.add("_corrupt_record", StringType))
-      .load(path)
 
   /** nodes(id, lat, lon, user, uid, version, changeset, timestamp) —
     * all strings (ref keeps XML attribute text verbatim). */

@@ -1,8 +1,7 @@
 package graft.osm
 
 /** The OSM input paths, the one configuration point every OSM entry point
-  * reads (queries.OsmQueries, the Cli mains, OsmProfile, the shatin
-  * specs):
+  * reads (queries.OsmQueries, the Cli mains, the shatin specs):
   * `SPARK_GRAFT_OSM` names the extract and `SPARK_GRAFT_OSM_OFFICIAL` the
   * official street list; unset, each defaults to the reference's bundled
   * input below. */

@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 /** X7 — the orchestrating pipeline (process_map, parse_clean_and_csv.py:
   * 206-290): read OSM XML once per element kind, shape, fix phones (nodes +
   * ways), fix street names (ways only), derive update_history, expose the
-  * six output relations.
+  * six output relations (and, as an extension, `relations` and
+  * `relationMembers`). It is the one place an OSM element kind is scanned
+  * and staged: every raw scan goes through [[stagedRaw]], at one width and
+  * under one quarantine rule.
   *
   * Each element is fixed on its own, inside its nested tag array, as the
   * reference's shape_element does: the staged per-element relations
@@ -87,32 +90,46 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     else if (df.rdd.getNumPartitions < width) df.repartition(width)
     else df
 
-  /** Strict scan by default; with [[quarantineDir]] set, a PERMISSIVE scan
-    * whose malformed records are written to `<dir>/<kind>` as text while
-    * clean rows flow on — the 100 TB posture where one truncated shard
-    * must neither kill the job nor silently vanish. The write happens at
-    * staging time (the raw read is cached first: Spark disallows querying
-    * only the corrupt column off a raw scan). */
-  private def stagedRaw(kind: String, strict: => DataFrame,
-      permissive: => DataFrame): DataFrame =
+  /** One raw scan of an element kind, staged at the pipeline's width.
+    * `read(permissive)` is that kind's [[OsmIngest]] reader.
+    *
+    * Strict by default: a malformed element fails the scan. With
+    * [[quarantineDir]] set, the scan is PERMISSIVE and quarantines per
+    * FILE: the XML source loses the rest of a file after a malformed
+    * element (for the way scan of a file whose bad element is a node, the
+    * whole file), so a file whose scan of this kind hits a corrupt record
+    * contributes NO rows of this kind. Its path and corrupt text are
+    * written to `<dir>/<kind>` as JSON lines (`file`, `record`); every
+    * other file's rows flow on unchanged — the 100 TB posture where one
+    * truncated shard must neither kill the job nor leave a half-read file
+    * among the results. The write happens at staging time (the raw read
+    * is staged first: Spark disallows querying only the corrupt column
+    * off a raw scan). */
+  private def stagedRaw(kind: String, read: Boolean => DataFrame)
+      : DataFrame =
     quarantineDir match {
-      case None => graft.ops.Stage.barrier(fitted(strict))
+      case None => graft.ops.Stage.barrier(fitted(read(false)))
       case Some(q) =>
-        val raw = graft.ops.Stage.barrier(fitted(permissive))
-        raw.filter(col("_corrupt_record").isNotNull)
-          .select(col("_corrupt_record"))
-          .write.mode("overwrite").text(s"$q/$kind")
-        raw.filter(col("_corrupt_record").isNull).drop("_corrupt_record")
+        val raw = graft.ops.Stage.barrier(fitted(read(true)))
+        val corrupt = raw.filter(col("_corrupt_record").isNotNull).select(
+          col("_file").as("file"), col("_corrupt_record").as("record"))
+        corrupt.write.mode("overwrite").json(s"$q/$kind")
+        val dirty = corrupt.select("file").distinct().collect()
+          .map(_.getString(0))
+        raw.filter(!col("_file").isin(dirty.toSeq: _*))
+          .drop("_corrupt_record", "_file")
     }
 
-  private val rawNodesM = memo("rawNodes")(stagedRaw("nodes",
-    OsmIngest.rawNodes(spark, osmPath),
-    OsmIngest.rawNodesPermissive(spark, osmPath)))
+  private val rawNodesM = memo("rawNodes")(
+    stagedRaw("nodes", OsmIngest.rawNodes(spark, osmPath, _)))
   private def rawNodes = rawNodesM()
-  private val rawWaysM = memo("rawWays")(stagedRaw("ways",
-    OsmIngest.rawWays(spark, osmPath),
-    OsmIngest.rawWaysPermissive(spark, osmPath)))
+  private val rawWaysM = memo("rawWays")(
+    stagedRaw("ways", OsmIngest.rawWays(spark, osmPath, _)))
   private def rawWays = rawWaysM()
+  /** `<relation>` elements — an extension beyond the reference, which
+    * skips them ([[OsmIngest.relationSchema]]). */
+  private val rawRelationsM = memo("rawRelations")(
+    stagedRaw("relations", OsmIngest.rawRelations(spark, osmPath, _)))
 
   // nodes/ways appear in several branches of one exploration job
   // (counts + distinct_users + contribution joins) — barrier, not cache
@@ -123,6 +140,8 @@ final case class OsmPipeline(spark: SparkSession, osmPath: String,
     memo("ways")(graft.ops.Stage.barrier(OsmIngest.ways(rawWays)))
   def ways: DataFrame = waysM()
   def wayNodes: DataFrame = OsmIngest.wayNodes(rawWays)
+  def relations: DataFrame = OsmIngest.relations(rawRelationsM())
+  def relationMembers: DataFrame = OsmIngest.relationMembers(rawRelationsM())
 
   /** Shaped tags BEFORE any cleaning — the audit scripts' input (they run
     * against the uncleaned data by design, SURVEY.md §3.2-3.3). Cheap

@@ -55,25 +55,16 @@ object OsmQueries {
     val p = pipe(s)
     p.officialUncorrected; p.nodes; p.ways
     p.nodeTagsFixed; p.wayTagsFixed; p.updateHistory; p.phoneAudit
-    rawRelations(s)
+    p.relations
     ()
   }
 
-  // relation ingestion is an extension beyond the reference (its
-  // shape_element skips <relation> elements); content pinned by
-  // reference-derived hashes in OsmGoldenSpec. The raw parse is staged
-  // per session so the two queries below share one XML scan.
-  private val relCache = new graft.ops.SessionScoped[
-    org.apache.spark.sql.DataFrame]
-  private def rawRelations(s: SparkSession) =
-    relCache.getOrCompute(s, OsmPath)(graft.ops.Stage.barrier(
-      graft.osm.OsmIngest.rawRelations(s, OsmPath)))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_osm_relations" -> ((s, _) =>
-      graft.osm.OsmIngest.relations(rawRelations(s))),
-    "q_osm_relation_members" -> ((s, _) =>
-      graft.osm.OsmIngest.relationMembers(rawRelations(s))),
+    // relation ingestion is an extension beyond the reference (its
+    // shape_element skips <relation> elements); both read the pipeline's
+    // one staged relation scan
+    "q_osm_relations" -> ((s, _) => pipe(s).relations),
+    "q_osm_relation_members" -> ((s, _) => pipe(s).relationMembers),
     "q_osm_nodes" -> ((s, _) => pipe(s).nodes),
     "q_osm_node_tags" -> ((s, _) => pipe(s).nodeTags),
     "q_osm_ways" -> ((s, _) => pipe(s).ways),

@@ -348,18 +348,32 @@ class DedupSpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  /** [[Dedup.hammingNearDupPairs]] plus the number of (blk, key) buckets
+    * its `maxBucket` rail drops, counted by one eager census job over the
+    * engine's blocking recipe ([[Dedup.chunkPairDefs]]): the reference for
+    * what the rail's own lazy census drops. */
+  private def hammingPairsWithDrops(sigs: org.apache.spark.sql.DataFrame,
+      maxBucket: Int = 100000): (org.apache.spark.sql.DataFrame, Long) = {
+    val blocks = Dedup.chunkPairDefs(col("simhash")).map { case (b, k) =>
+      struct(lit(b).as("blk"), k.as("key"))
+    }
+    val dropped = sigs.select(explode(array(blocks: _*)).as("ck"))
+      .groupBy(col("ck.blk"), col("ck.key")).count()
+      .filter(col("count") > maxBucket).count()
+    (Dedup.hammingNearDupPairs(sigs, maxBucket = maxBucket), dropped)
+  }
+
   test("hamming blocking: maxBucket drops a degenerate constant bucket") {
     // 50 identical signatures: every (blk, key) bucket holds all 50 rows
     // — the shape that would otherwise go quadratic
     val sigs = (1L to 50L).map(i => (i, 0x0123456789abcdefL))
       .toDF("doc_id", "simhash")
-    val (capped, dropped) =
-      Dedup.hammingNearDupPairsWithStats(sigs, maxBucket = 49)
+    val (capped, dropped) = hammingPairsWithDrops(sigs, maxBucket = 49)
     assert(capped.count() == 0L)
     // the rail is not silent: all 28 over-cap chunk-pair buckets counted
     assert(dropped == 28L)
     // under the default rail the same bucket pairs normally
-    val (open, dropped2) = Dedup.hammingNearDupPairsWithStats(sigs)
+    val (open, dropped2) = hammingPairsWithDrops(sigs)
     assert(open.count() == 50L * 49L / 2L)
     assert(dropped2 == 0L)
   }
@@ -371,7 +385,7 @@ class DedupSpec extends SparkSpec {
     // accounting must be a partial-aggregated groupBy (r10 verdict #1).
     val sigs = (1L to 50L).map(i => (i, i * 0x9e3779b97f4a7c15L))
       .toDF("doc_id", "simhash")
-    val (pairs, _) = Dedup.hammingNearDupPairsWithStats(sigs)
+    val pairs = Dedup.hammingNearDupPairs(sigs)
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       "bucket-size accounting reintroduced a value-partitioned window:\n" +

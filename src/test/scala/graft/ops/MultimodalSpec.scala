@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.Dataset
+
 import graft.SparkSpec
 import graft.Tables
 
@@ -7,6 +9,19 @@ class MultimodalSpec extends SparkSpec {
 
   lazy val media = Multimodal.mediaFromDocuments(
     Tables(spark, sf).documents)
+
+  /** The float feature stage a real decoder would produce: each media's
+    * [[Multimodal.histStub]] normalized by its byte count, in the same
+    * batched per-partition shape as [[Multimodal.extractHistograms]]. */
+  private def extractFeatures(media: Dataset[Multimodal.Media],
+      dim: Int = 16): Dataset[(Long, Int, Array[Float])] = {
+    import spark.implicits._
+    media.mapPartitions(_.map { m =>
+      val n = math.max(m.bytes.length, 1)
+      (m.media_id, m.bytes.length,
+        Multimodal.histStub(m.bytes, dim).map(v => v.toFloat / n))
+    })
+  }
 
   test("media table: opaque binary payload + typed metadata") {
     val rows = media.collect()
@@ -32,15 +47,15 @@ class MultimodalSpec extends SparkSpec {
     }
     assert(rows(-2L).bytes.isEmpty, "NULL text must be a zero-byte payload")
     // every downstream per-partition pass handles the zero-byte payload
-    assert(Multimodal.extractFeatures(m).count() == 3)
+    assert(extractFeatures(m).count() == 3)
     assert(Multimodal.extractHistograms(m).count() == 3)
   }
 
   test("feature extraction: fixed dim, deterministic, partition-batched") {
-    val f1 = Multimodal.extractFeatures(media, dim = 16).collect()
-      .map(f => f.media_id -> f.features.toSeq).toMap
-    val f2 = Multimodal.extractFeatures(media.repartition(7), dim = 16)
-      .collect().map(f => f.media_id -> f.features.toSeq).toMap
+    val f1 = extractFeatures(media, dim = 16).collect()
+      .map(f => f._1 -> f._3.toSeq).toMap
+    val f2 = extractFeatures(media.repartition(7), dim = 16)
+      .collect().map(f => f._1 -> f._3.toSeq).toMap
     assert(f1 == f2) // partitioning-invariant
     assert(f1.values.forall(_.length == 16))
   }
@@ -48,13 +63,13 @@ class MultimodalSpec extends SparkSpec {
   test("histograms: integer stage of the decode stub, floats derive from it") {
     val hists = Multimodal.extractHistograms(media, dim = 16).collect()
       .map(h => h.media_id -> h).toMap
-    val feats = Multimodal.extractFeatures(media, dim = 16).collect()
+    val feats = extractFeatures(media, dim = 16).collect()
     assert(feats.nonEmpty)
-    feats.foreach { f =>
-      val h = hists(f.media_id)
-      assert(h.hist.length == 16 && h.n_bytes == f.n_bytes)
+    feats.foreach { case (id, nBytes, features) =>
+      val h = hists(id)
+      assert(h.hist.length == 16 && h.n_bytes == nBytes)
       val n = math.max(h.n_bytes, 1)
-      assert(f.features.toSeq == h.hist.toSeq.map(_.toFloat / n))
+      assert(features.toSeq == h.hist.toSeq.map(_.toFloat / n))
     }
     // partitioning-invariant like the float path
     val h2 = Multimodal.extractHistograms(media.repartition(7), dim = 16)

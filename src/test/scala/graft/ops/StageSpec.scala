@@ -30,7 +30,7 @@ class StageSpec extends SparkSpec {
     assert(v == 1 && v == 1 && calls == 1)
     assert(scoped.getOrCompute(spark, "k2") { calls += 1; calls } == 2)
     assert(scoped.allValues.toSet == Set(1, 2))
-    scoped.evict(spark)
+    Stage.releaseAll(spark) // evicts every release-scoped entry of spark
     assert(scoped.size == 0)
     assert(v == 3) // recomputed after eviction
   }

@@ -40,8 +40,8 @@ class MultiFileScanSpec extends SparkSpec {
       xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // Spark disallows querying only the corrupt column off a raw scan —
     // cache the parsed result first (the documented pattern)
-    val raw = OsmIngest.rawNodesPermissive(spark, dir.toString + "/*.osm")
-      .cache()
+    val raw = OsmIngest.rawNodes(spark, dir.toString + "/*.osm",
+      permissive = true).cache()
     val clean = raw.filter(org.apache.spark.sql.functions
       .col("_corrupt_record").isNull)
     val dirty = raw.filter(org.apache.spark.sql.functions
@@ -86,8 +86,10 @@ class MultiFileScanSpec extends SparkSpec {
     val q = Files.createTempDirectory("graft-osm-quarantine").toString
     val pipe = OsmPipeline(spark, dir.toString + "/*.osm",
       OsmInputs.official, Some(q))
-    // shatin's 13,676 nodes + the one well-formed dirty-shard node survive
-    assert(pipe.nodes.count() == 13676 + 1)
+    // shatin's 13,676 nodes survive unchanged; the dirty shard's scan
+    // went corrupt, so none of its nodes (not even the well-formed one
+    // ahead of the malformation) reach the output
+    assert(pipe.nodes.count() == 13676)
     assert(pipe.ways.count() == 1958)
     val quarantined = spark.read.text(s"$q/nodes").count()
     assert(quarantined >= 1, "the malformed node must land in quarantine")

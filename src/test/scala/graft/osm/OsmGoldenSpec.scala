@@ -82,7 +82,7 @@ class OsmGoldenSpec extends SparkSpec {
   }
 
   test("bilingual street-name audit finds the two known dirty ways") {
-    val audit = Audits.bilingualStreetNames(spark, osm, psi)
+    val audit = pipe.streetAudit
       .select("en_only", "reg_eng", "zh_only", "reg_chi")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3))).toSet

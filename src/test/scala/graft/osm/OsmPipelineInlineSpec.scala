@@ -75,6 +75,17 @@ class OsmPipelineInlineSpec extends SparkSpec {
       |  <tag k="phone" v="2345 6789"/>
       |  <tag k="phone" v="+852 23456789"/>
       | </way>
+      | <relation id="201" user="a" uid="7" version="2" changeset="9"
+      |           timestamp="2017-01-02T00:00:00Z">
+      |  <member type="way" ref="101" role="outer"/>
+      |  <member type="way" ref="102" role=""/>
+      |  <tag k="type" v="route"/>
+      |  <member type="node" ref="3" role="stop"/>
+      | </relation>
+      | <relation id="202" user="b" uid="8" version="1" changeset="9"
+      |           timestamp="2017-01-01T00:00:00Z">
+      |  <member type="relation" ref="201" role="sub"/>
+      | </relation>
       |</osm>
       |""".stripMargin
 
@@ -308,6 +319,94 @@ class OsmPipelineInlineSpec extends SparkSpec {
     assert(spark.read.text(s"$q/nodes").count() >= 1,
       "the malformed node must land in quarantine")
     Stage.releaseAll(spark)
+  }
+
+  test("quarantine is per file: a malformed node mid-file drops that " +
+      "file's rows of every kind it corrupts, and names the file") {
+    // node 9000000002's attribute quote never closes, so the node scan
+    // reads on past it; PERMISSIVE parsing keeps 9000000001 and loses
+    // everything after the malformation — a half-read file. Quarantine
+    // must drop the whole file instead.
+    val dirty =
+      """<?xml version="1.0" encoding="UTF-8"?>
+        |<osm version="0.6">
+        | <node id="9000000001" lat="22.41" lon="114.21" user="c" uid="9"
+        |       version="1" changeset="9"
+        |       timestamp="2017-01-01T00:00:00Z"><tag k="phone"
+        |       v="2345 6789"/></node>
+        | <node id="9000000002" lat="22.42" lon="114.22" user="c" uid="9"
+        |       version="1" changeset="9"
+        |       timestamp="2017-01-01T00:00:00Z"><tag k="broken</node>
+        | <node id="9000000003" lat="22.43" lon="114.23" user="c" uid="9"
+        |       version="1" changeset="9" timestamp="2017-01-01T00:00:00Z"/>
+        | <node id="9000000004" lat="22.44" lon="114.24" user="c" uid="9"
+        |       version="1" changeset="9" timestamp="2017-01-01T00:00:00Z"/>
+        | <way id="9000000101" user="c" uid="9" version="1" changeset="9"
+        |      timestamp="2017-01-01T00:00:00Z">
+        |  <nd ref="9000000001"/>
+        |  <nd ref="9000000003"/>
+        |  <tag k="highway" v="residential"/>
+        |  <tag k="name:en" v="Main Street"/>
+        | </way>
+        | <relation id="9000000201" user="c" uid="9" version="1"
+        |           changeset="9" timestamp="2017-01-01T00:00:00Z">
+        |  <member type="way" ref="9000000101" role="outer"/>
+        | </relation>
+        |</osm>
+        |""".stripMargin
+    val dir = Files.createTempDirectory("graft-osm-midfile")
+    Files.write(dir.resolve("clean.osm"),
+      osmXml.getBytes(StandardCharsets.UTF_8))
+    Files.write(dir.resolve("dirty.osm"),
+      dirty.getBytes(StandardCharsets.UTF_8))
+    val q = Files.createTempDirectory("graft-osm-quarantine").toString
+    val clean = Files.createTempDirectory("graft-osm-csv").toString
+    val mixed = Files.createTempDirectory("graft-osm-csv").toString
+    try {
+      newPipeline().writeCsvs(clean)
+      val p = OsmPipeline(spark, s"$dir/*.osm", inputs._2, Some(q))
+      p.writeCsvs(mixed)
+      sinks.foreach { name =>
+        assert(cells(readCsv(mixed, name)) == cells(readCsv(clean, name)),
+          name)
+      }
+      assert(cells(p.relations) == cells(pipeline.relations))
+      val quarantined = spark.read.json(s"$q/nodes").collect()
+      assert(quarantined.nonEmpty,
+        "the malformed node must land in quarantine")
+      quarantined.foreach { r =>
+        assert(r.getAs[String]("file").endsWith("/dirty.osm"), r)
+        assert(r.getAs[String]("record").contains("9000000002"), r)
+      }
+    } finally Stage.releaseAll(spark)
+  }
+
+  test("relations and members: rows, member positions, one partition, " +
+      "and one staged scan shared by both") {
+    // the relation queries (q_osm_relations, q_osm_relation_members) are
+    // these two accessors of the session's shared pipeline
+    Stage.releaseAll(spark)
+    val p = newPipeline()
+    try {
+      val before = Stage.stagedCount(spark)
+      assert(rows(p.relations) == sorted(
+        Seq("201", "a", "7", "2", "9", "2017-01-02T00:00:00Z"),
+        Seq("202", "b", "8", "1", "9", "2017-01-01T00:00:00Z")))
+      val afterRelations = Stage.stagedCount(spark)
+      // position is the member's ordinal among members (a tag between
+      // members does not count); an empty role stays an empty string
+      assert(rows(p.relationMembers) == sorted(
+        Seq("201", "way", "101", "outer", 0),
+        Seq("201", "way", "102", "", 1),
+        Seq("201", "node", "3", "stop", 2),
+        Seq("202", "relation", "201", "sub", 0)))
+      assert(afterRelations == before + 1,
+        "the relation scan must stage exactly once")
+      assert(Stage.stagedCount(spark) == afterRelations,
+        "members must read the staged relation scan, not scan again")
+      assert(p.relations.rdd.getNumPartitions == 1)
+      assert(p.relationMembers.rdd.getNumPartitions == 1)
+    } finally Stage.releaseAll(spark)
   }
 
   test("without a quarantine dir, a malformed node fails the scan instead " +

@@ -36,6 +36,12 @@
 # appear under src/main/scala/graft/osm/ only inside OsmPipeline's
 # `fitted` helper (from its `def fitted(` line to the next blank line).
 #
+# It also refuses a second home for OSM XML scanning: every OSM element
+# kind is read by graft.osm.OsmIngest's one reader and staged by
+# OsmPipeline, and the official street list has its own reader, so
+# `format("xml")` may appear under src/main/scala only in
+# src/main/scala/graft/osm/OsmIngest.scala and OfficialList.scala.
+#
 # Usage: tools/tripwire.sh
 set -e
 cd "$(dirname "$0")/.."
@@ -55,7 +61,7 @@ if [ -n "$stray" ]; then
 fi
 mains="graft/Bench.scala graft/Verify.scala graft/PlanDump.scala
 graft/SkewBench.scala graft/osm/OsmPipeline.scala graft/osm/Cli.scala
-graft/osm/OsmProfile.scala graft/tools/CurationChainBench.scala
+graft/tools/CurationChainBench.scala
 graft/tools/DriverProfDiag.scala graft/tools/JobCountDiag.scala
 graft/tools/ScaleData.scala"
 allowed=$(for m in $mains; do echo "src/main/scala/$m"; done)
@@ -85,6 +91,14 @@ stray=$({
 } || true)
 if [ -n "$stray" ]; then
   echo "tripwire: repartition/coalesce under $osm outside OsmPipeline.fitted:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+xml="$osm/OsmIngest.scala
+$osm/OfficialList.scala"
+stray=$(grep -rlF 'format("xml")' src/main/scala | grep -vxF "$xml" || true)
+if [ -n "$stray" ]; then
+  echo "tripwire: format(\"xml\") outside OsmIngest and OfficialList:" >&2
   echo "$stray" >&2
   exit 1
 fi

@@ -73,6 +73,8 @@ plant "OSM repartition outside the width helper" \
   'def f(d: org.apache.spark.sql.DataFrame) = d.repartition(8)' osm
 plant "OSM coalesce outside the width helper" \
   'def f(d: org.apache.spark.sql.DataFrame) = d.coalesce(1)' osm
+plant "OSM XML scan outside OsmIngest" \
+  'def f(s: org.apache.spark.sql.SparkSession) = s.read.format("xml")' osm
 
 # a coalesce in OsmPipeline.scala itself, outside `fitted`, must fire too
 fresh
